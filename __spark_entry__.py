@@ -2170,17 +2170,10 @@ def graph_modularity(spark, sf_dir):
 
     edges = _knn_edges(spark, sf_dir)
     # symmetrize ONCE: label propagation and the modularity metric
-    # consume the identical deduped symmetric edge set — previously
-    # each built (and shuffled) its own copy
-    base = edges.select("src", "dst").localCheckpoint(eager=False)
-    und = (
-        base.union(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = cluster.label_propagation(edges, n_iter=3, und=und)
+    # consume the identical deduped symmetric edge set
+    sym = graph.symmetric_graph(edges, weight_col=None)
+    labels = cluster.label_propagation(edges, n_iter=3, sym=sym)
+    und = sym.edges.select(F.col("i").alias("src"), F.col("j").alias("dst"))
     return graph.modularity(edges, labels, und=und)
 
 

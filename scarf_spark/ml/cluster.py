@@ -32,12 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scarf_spark.operators.graph import SymmetricGraph, symmetric_graph
+
 
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 3,
     nodes: DataFrame | None = None,
-    und: DataFrame | None = None,
+    sym: SymmetricGraph | None = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation: labels start as the
     node id; each iteration every node takes the modal label of its
@@ -46,32 +48,13 @@ def label_propagation(
     Each iteration is one shuffle (groupBy node); the label table is
     node-sized and broadcastable against the edge list.
 
-    ``und``: optional pre-symmetrized (src, dst) edge table, already
-    deduped and checkpointed — callers that also feed the same graph
-    to another consumer (graph_modularity runs modularity over the
-    identical symmetric edge set) pass it to avoid materializing the
-    union + distinct shuffle twice."""
-    # lazy localCheckpoint (not persist) on the symmetrized edge list:
-    # it is consumed once per iteration, and its upstream (typically a
-    # full KNN build) would otherwise be recomputed per action per
-    # iteration. Checkpoint blocks are GC-reclaimed when the returned
-    # plan drops — a bare persist here had no paired unpersist and
-    # leaked executor storage across calls (the ivf/dedup lesson).
-    # checkpoint the directed edge list BEFORE the symmetrizing
-    # self-union: both union branches reference the same upstream plan
-    # (typically a full KNN build), and without the cut Spark executes
-    # that upstream twice — once per branch
-    if und is None:
-        base = edges.select("src", "dst").localCheckpoint(eager=False)
-        und = (
-            base.union(
-                base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+    ``sym``: a shared ``symmetric_graph`` of ``edges`` (only its
+    deduped symmetric pair set is read); built unweighted if absent."""
+    if sym is None:
+        sym = symmetric_graph(edges, weight_col=None)
+    und = sym.edges.select(F.col("i").alias("src"), F.col("j").alias("dst"))
     if nodes is None:
-        nodes = und.select(F.col("src").alias("node")).distinct()
+        nodes = sym.deg.select("node")
     labels = nodes.select("node", F.col("node").alias("cluster"))
     for _ in range(n_iter):
         # no F.broadcast hint here: forcing it on the checkpointed

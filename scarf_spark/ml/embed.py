@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scarf_spark.operators.graph import SymmetricGraph, symmetric_graph
+
 
 def symmetrize_edges(edges: DataFrame, weight_col: str = "weight") -> DataFrame:
     """Fuzzy simplicial set symmetrization ``g + gᵀ − g ∘ gᵀ``
@@ -289,6 +291,7 @@ def spectral_embedding(
     dims: int = 2,
     n_iter: int = 8,
     weight_col: str = "weight",
+    sym: SymmetricGraph | None = None,
 ) -> DataFrame:
     """Fully DISTRIBUTED spectral layout — the oracle-able twin of the
     driver-side SGD layouts (umap-learn seeds its layout from exactly
@@ -318,25 +321,25 @@ def spectral_embedding(
 
     Sign convention: the component with the largest |value| (node-id
     tie-break) is made positive, the pca_fit convention. Returns
-    (node, e1..e<dims>) ROUND(6)."""
-    und = (
-        edges.select(
-            F.col("src").alias("i"), F.col("dst").alias("j"), F.col(weight_col).alias("w")
+    (node, e1..e<dims>) ROUND(6). ``sym``: a shared
+    ``symmetric_graph`` of ``edges``; built here if absent."""
+    import math
+
+    if sym is None:
+        sym = symmetric_graph(edges, weight_col)
+    if sym.n <= dims:
+        raise ValueError(
+            f"spectral_embedding: need more nodes ({sym.n}) than "
+            f"dimensions ({dims}) — the lazy walk has only "
+            f"{max(sym.n - 1, 0)} non-trivial eigenvectors"
         )
-        .unionAll(
-            edges.select(
-                F.col("dst").alias("i"), F.col("src").alias("j"), F.col(weight_col).alias("w")
-            )
-        )
-        .groupBy("i", "j")
-        .agg(F.sum("w").alias("w"))
-    )
-    deg = und.groupBy("i").agg(F.sum("w").alias("d"))
+    deg = sym.deg.select(F.col("node").alias("i"), "d")
     # the lazy-walk shift (M + I)/2 is folded into the edge table as
     # halved weights plus 0.5 self-loops — the per-round matvec is then
-    # ONE join + hash agg with no separate shift pass
+    # ONE join + hash agg with no separate shift pass; the lazy cut is
+    # filled by the first round and read by every later one
     ew = (
-        und.join(deg, "i")
+        sym.edges.join(deg, "i")
         .join(deg.select(F.col("i").alias("j"), F.col("d").alias("dj")), "j")
         .select(
             "i", "j", (F.col("w") / F.sqrt(F.col("d") * F.col("dj")) / F.lit(2.0)).alias("wn")
@@ -344,23 +347,13 @@ def spectral_embedding(
         .unionAll(
             deg.select(F.col("i"), F.col("i").alias("j"), F.lit(0.5).alias("wn"))
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    import math
-
-    n_nodes = deg.count()
-    if n_nodes <= dims:
-        raise ValueError(
-            f"spectral_embedding: need more nodes ({n_nodes}) than "
-            f"dimensions ({dims}) — the lazy walk has only "
-            f"{max(n_nodes - 1, 0)} non-trivial eigenvectors"
-        )
-    sumd = float(deg.agg(F.sum("d")).collect()[0][0])
     # u0 = sqrt(d)/sqrt(sum d): the known unit top eigenvector of M
-    base = deg.select(
-        F.col("i").alias("node"),
-        (F.sqrt(F.col("d")) / F.lit(math.sqrt(sumd))).alias("u0"),
-    ).localCheckpoint(eager=True)
+    base = sym.deg.select(
+        "node",
+        (F.sqrt(F.col("d")) / F.lit(math.sqrt(sym.sumd))).alias("u0"),
+    )
     k = dims
     # seedless portable starts: md5(node || '_ec') top-60-bit / 2^60 - 0.5
     v = base.select(
@@ -387,7 +380,7 @@ def spectral_embedding(
             ).alias(f"v{c + 1}")
             for c in range(k)
         ],
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     for _ in range(n_iter):
         # NO broadcast hints in the round loop: an explicit broadcast
         # of an unmaterialized node-sized plan costs a separate

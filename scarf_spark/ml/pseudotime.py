@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scarf_spark.operators.graph import SymmetricGraph, symmetric_graph
+
 
 def pba_pseudotime(
     edges: DataFrame, source_node: int, weight_col: str = "weight"
@@ -62,6 +64,7 @@ def harmonic_potential(
     source_node: int,
     n_iter: int = 16,
     weight_col: str = "weight",
+    sym: SymmetricGraph | None = None,
 ) -> DataFrame:
     """Fully DISTRIBUTED twin of :func:`pba_pseudotime` — the scale
     path that never collects the graph: a fixed-``n_iter`` deflated
@@ -83,53 +86,36 @@ def harmonic_potential(
     source at the extremum (test_harmonic_potential_orders_path).
 
     Returns (node, pseudotime) min-max normalized to [0, 1],
-    ROUND(6)."""
-    und = (
-        edges.select(F.col("src").alias("i"), F.col("dst").alias("j"), F.col(weight_col).alias("w"))
-        .unionAll(
-            edges.select(F.col("dst").alias("i"), F.col("src").alias("j"), F.col(weight_col).alias("w"))
-        )
-        .groupBy("i", "j")
-        .agg(F.sum("w").alias("w"))
-        # cut once: both deg and the D⁻¹ fold below read this table
-        .localCheckpoint(eager=False)
-    )
-    deg = und.groupBy("j").agg(F.sum("w").alias("d")).localCheckpoint(eager=False)
-    # fold D⁻¹ into the edge table once; every iteration reuses this
-    # materialization (the pagerank shape)
-    ew = (
-        und.join(deg, "j")
-        .select("i", "j", (F.col("w") / F.col("d")).alias("wn"))
-        .localCheckpoint(eager=True)
-    )
-    # the node set IS deg's key set (und is symmetric: every i appears
-    # as a j), so base derives from deg directly — the previous
-    # distinct + join pair shuffled the same rows twice to rebuild a
-    # table deg already was. ONE setup action covers the degenerate-
-    # input guards and the deflation denominator together.
-    r0 = deg.agg(
-        F.count("*").alias("n"),
-        F.sum("d").alias("sumd"),
-        F.sum(F.when(F.col("j") == source_node, 1).otherwise(0)).alias("has_src"),
-    ).collect()[0]
-    n = r0["n"]
+    ROUND(6). ``sym``: a shared ``symmetric_graph`` of ``edges``;
+    built here if absent."""
+    if sym is None:
+        sym = symmetric_graph(edges, weight_col)
+    n = sym.n
     # fail loud on degenerate inputs instead of emitting a constant/NULL
     # potential (the welch_t/drift_terms doctrine): a <2-node graph has
     # no potential and a missing source makes b a constant vector
     if n < 2:
         raise ValueError(f"harmonic_potential: need >= 2 nodes, got {n}")
-    if not r0["has_src"]:
+    if not sym.deg.where(F.col("node") == source_node).collect():
         raise ValueError(
             f"harmonic_potential: source node {source_node} not in the graph"
         )
-    sumd = float(r0["sumd"])
-    base = deg.select(
-        F.col("j").alias("node"),
-        F.when(F.col("j") == source_node, F.lit(1.0))
+    # fold D⁻¹ into the edge table once (A·D⁻¹ is column-stochastic,
+    # so divide by the degree of j); the first round fills the lazy
+    # cut and every later one reuses it (the pagerank shape)
+    ew = (
+        sym.edges.join(sym.deg.withColumnRenamed("node", "j"), "j")
+        .select("i", "j", (F.col("w") / F.col("d")).alias("wn"))
+        .localCheckpoint(eager=False)
+    )
+    sumd = sym.sumd
+    base = sym.deg.select(
+        "node",
+        F.when(F.col("node") == source_node, F.lit(1.0))
         .otherwise(F.lit(-1.0 / max(n - 1, 1)))
         .alias("b"),
         "d",
-    ).localCheckpoint(eager=True)
+    )
     v = base.select("node", F.col("b").alias("v"))
     for t in range(n_iter):
         # no broadcast hints in the loop: the explicit broadcast of an
@@ -184,38 +170,4 @@ def harmonic_potential(
         F.round(
             (F.col("v") - F.lit(float(mn))) / F.lit(float(mx) - float(mn)), 6
         ).alias("pseudotime"),
-    )
-
-
-def initial_embedding(
-    reduced: DataFrame, clusters: DataFrame, dims: int = 2
-) -> DataFrame:
-    """Initial embedding (``graph_datastore.py:427-457``): PCA(dims) of
-    per-cluster centroids (a tiny driver matrix), broadcast back to
-    cells by cluster label. Returns (cell_id, e1, e2, ...)."""
-    import numpy as np
-
-    pc_cols = [c for c in reduced.columns if c.startswith("pc")]
-    cent = (
-        reduced.join(clusters.withColumnRenamed("node", "cell_id"), "cell_id")
-        .groupBy("cluster")
-        .agg(*[F.avg(c).alias(c) for c in pc_cols])
-        .collect()
-    )
-    m = np.array([[r[c] for c in pc_cols] for r in cent])
-    m = m - m.mean(axis=0, keepdims=True)
-    u, s, vt = np.linalg.svd(m, full_matrices=False)
-    proj = m @ vt[:dims].T
-    spark = reduced.sparkSession
-    cent_df = spark.createDataFrame(
-        [
-            (int(r["cluster"]), *[round(float(x), 6) for x in proj[i]])
-            for i, r in enumerate(cent)
-        ],
-        ["cluster", *[f"e{d + 1}" for d in range(dims)]],
-    )
-    return (
-        clusters.withColumnRenamed("node", "cell_id")
-        .join(F.broadcast(cent_df), "cluster")
-        .select("cell_id", *[f"e{d + 1}" for d in range(dims)])
     )

@@ -21,6 +21,8 @@ only genuinely constant-size frames (one-row totals) carry hints."""
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -166,6 +168,42 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
         .where(F.col("u") != F.col("w"))
         .distinct()
     )
+
+
+class SymmetricGraph(NamedTuple):
+    """``edges`` (i, j, w): A + Aᵀ, one row per ordered pair; ``deg``
+    (node, d): weighted degrees; ``n`` nodes; ``sumd`` = Σd."""
+
+    edges: DataFrame
+    deg: DataFrame
+    n: int
+    sumd: float
+
+
+def symmetric_graph(edges: DataFrame, weight_col: str | None = "weight") -> SymmetricGraph:
+    """The shared prologue of spectral_embedding, harmonic_potential and
+    label_propagation (Pregelix's split: vertex and edge state built
+    once, each superstep a join + group-by over it). Both tables are
+    lazy cuts that ONE aggregate action fills while computing
+    ``n``/``sumd``; the directed input is cut before the self-union so
+    an unpersisted upstream runs once. ``weight_col=None``: weight 1."""
+    w = F.col(weight_col) if weight_col else F.lit(1.0)
+    base = edges.select(
+        F.col("src").alias("i"), F.col("dst").alias("j"), w.alias("w")
+    ).localCheckpoint(eager=False)
+    und = (
+        base.unionAll(base.select(F.col("j").alias("i"), F.col("i").alias("j"), "w"))
+        .groupBy("i", "j")
+        .agg(F.sum("w").alias("w"))
+        .localCheckpoint(eager=False)
+    )
+    deg = (
+        und.groupBy(F.col("i").alias("node"))
+        .agg(F.sum("w").alias("d"))
+        .localCheckpoint(eager=False)
+    )
+    r = deg.agg(F.count("*").alias("n"), F.sum("d").alias("sumd")).collect()[0]
+    return SymmetricGraph(und, deg, int(r["n"]), float(r["sumd"] or 0.0))
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

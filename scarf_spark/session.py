@@ -5,6 +5,9 @@ Tuned for local[N] testing but every setting is what we would ship on a
 partition coalescing), broadcast threshold large enough that every
 dimension table of the star schema broadcasts, shuffle partitions sized
 to the cluster (driver overrides via SPARK_GRAFT_CPUS locally).
+
+Unset, the local defaults fit the host: one task slot per usable CPU,
+and a JVM heap of half the physical RAM, at most 16g.
 """
 
 from __future__ import annotations
@@ -31,7 +34,8 @@ def get_spark(
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    half_ram_g = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SCARF_SHUFFLE_PARTITIONS", str(max(int(cpus), 8)))
     )
@@ -67,7 +71,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SCARF_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SCARF_DRIVER_MEM") or f"{min(16, max(1, half_ram_g))}g",
+        )
         # FAIR scheduling: concurrent query streams (bench throughput
         # run, multi-tenant notebooks) share executor slots round-robin
         # instead of convoying behind the first submitted job.  FAIR

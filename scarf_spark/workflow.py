@@ -18,6 +18,11 @@ memoized through :class:`scarf_spark.plans.registry.RunRegistry` when a
 registry root is given (the Spark analog of the reference's
 param-encoded Zarr subtree + ``latest_graph`` pointers,
 ``scarf/datastore/graph_datastore.py:556-575,1003-1008``).
+
+Materialization rule: every facade state replacement is cut once
+(:meth:`ScarfDataStore._update`), and later steps read the cut, as the
+reference loads each step's stored result; ``make_graph`` likewise
+builds the graph's symmetric prologue once for all its consumers.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 
 from scarf_spark.operators import normalize, qc
 from scarf_spark.operators.filters import auto_filter_bounds
+from scarf_spark.operators.graph import SymmetricGraph, symmetric_graph
 
 
 class ScarfDataStore:
@@ -34,8 +40,9 @@ class ScarfDataStore:
 
     Either pass the three DataFrames, or ``sf_dir`` to derive them from
     the star-schema testdata via :class:`scarf_spark.catalog.DataStore`
-    (counts = lineitem COO; the cell table starts as the QC aggregates
-    plus the non-destructive ``I`` validity mask, SURVEY.md §1.4)."""
+    (counts = lineitem COO; the cell table starts as the one-pass QC
+    aggregates plus the non-destructive ``I`` validity mask, SURVEY.md
+    §1.4)."""
 
     def __init__(
         self,
@@ -55,25 +62,34 @@ class ScarfDataStore:
             counts = DataStore(spark, sf_dir).counts()
         self.counts = counts.persist()
         if cells is None:
-            cells = (
-                qc.ncounts_per_cell(self.counts)
-                .join(qc.nfeatures_per_cell(self.counts), "cell_id")
-            )
+            cells = qc.cell_qc(self.counts)
         if "I" not in cells.columns:
             cells = cells.withColumn("I", F.lit(True))
-        self.cells = cells
         if feats is None:
             feats = self.counts.select("feat_id").distinct()
         if "I" not in feats.columns:
             feats = feats.withColumn("I", F.lit(True))
-        self.feats = feats
+        self._update(cells=cells, feats=feats)
         self.edges: DataFrame | None = None
+        self._sym: tuple[DataFrame, SymmetricGraph] | None = None
         self.markers: dict[str, DataFrame] = {}
         self._registry = None
         if registry_root is not None:
             from scarf_spark.plans.registry import RunRegistry
 
             self._registry = RunRegistry(spark, registry_root)
+
+    def _update(
+        self, cells: DataFrame | None = None, feats: DataFrame | None = None
+    ) -> "ScarfDataStore":
+        """The one place facade state changes: each new table is a lazy
+        ``localCheckpoint`` that the next action fills, so later steps
+        read it instead of replaying the accumulated chain."""
+        if cells is not None:
+            self.cells = cells.localCheckpoint(eager=False)
+        if feats is not None:
+            self.feats = feats.localCheckpoint(eager=False)
+        return self
 
     # ---- cell filtering (datastore.py:92-197) -------------------------
 
@@ -84,17 +100,16 @@ class ScarfDataStore:
         pred = F.col("I")
         for a, lo, hi in zip(attrs, lows, highs):
             pred = pred & F.col(a).between(lo, hi)
-        self.cells = self.cells.withColumn("I", pred)
-        return self
+        return self._update(cells=self.cells.withColumn("I", pred))
 
     def auto_filter_cells(self, attrs: list[str], n_std: float = 2.0) -> "ScarfDataStore":
         """mean ± n_std bounds per attribute (``datastore.py:140-197``),
         bounds computed distributed, then ANDed into ``I``."""
         for a in attrs:
             b = auto_filter_bounds(self.cells, a, n_std).collect()[0]
-            self.cells = self.cells.withColumn(
+            self._update(cells=self.cells.withColumn(
                 "I", F.col("I") & F.col(a).between(float(b["lo"]), float(b["hi"]))
-            )
+            ))
         return self
 
     def _active_counts(self) -> DataFrame:
@@ -111,12 +126,11 @@ class ScarfDataStore:
         hvg = mark_hvgs_binned(
             ac, n_cells=n_cells, n_bins=n_bins, top_n=top_n, min_mean=min_mean
         ).select("feat_id", F.lit(True).alias("hvgs"))
-        self.feats = (
+        return self._update(feats=(
             self.feats.drop("hvgs")
             .join(hvg, "feat_id", "left_outer")
             .withColumn("hvgs", F.coalesce(F.col("hvgs"), F.lit(False)))
-        )
-        return self
+        ))
 
     # ---- the core pipeline (graph_datastore.py:513-1020) -------------
 
@@ -184,6 +198,7 @@ class ScarfDataStore:
             )
         else:
             self.edges = compute().persist()
+        self._symmetric()
         return self.edges
 
     def _require_graph(self) -> DataFrame:
@@ -191,26 +206,24 @@ class ScarfDataStore:
             raise RuntimeError("run make_graph() first")
         return self.edges
 
+    def _symmetric(self) -> SymmetricGraph:
+        """The graph's prologue, built by :meth:`make_graph` (again only
+        if ``edges`` was replaced since)."""
+        edges = self._require_graph()
+        if self._sym is None or self._sym[0] is not edges:
+            self._sym = (edges, symmetric_graph(edges))
+        return self._sym[1]
+
     def _set_cell_cols(self, df: DataFrame) -> None:
         """Insert a result's columns into the cell table, reference
         ``_col_renamer`` style (``{assay}_{name}`` columns, replace on
         rerun).
 
-        Lazy lineage cut (r16, guide §5): the cells table accumulates
-        one join per facade operation, and without a cut every
-        downstream action replays the WHOLE accumulated chain — each
-        prior step's KNN builds and label propagations re-execute, and
-        analysis/planning time itself grows super-linearly with the
-        nesting (the round-9 surface test spent 92s mostly re-running
-        earlier pipeline stages). The checkpoint truncates the plan at
-        a cell-count-sized table; its blocks free when the next update
-        drops the reference."""
+        Cut through :meth:`_update`: without it the table would carry
+        one join per facade step, and every later action would replay
+        each earlier KNN build and label propagation."""
         new = [c for c in df.columns if c != "cell_id"]
-        self.cells = (
-            self.cells.drop(*new)
-            .join(df, "cell_id", "left_outer")
-            .localCheckpoint(eager=False)
-        )
+        self._update(cells=self.cells.drop(*new).join(df, "cell_id", "left_outer"))
 
     # ---- downstream (graph_datastore.py:1218-1584) -------------------
 
@@ -244,7 +257,7 @@ class ScarfDataStore:
         ``{assay}_leiden_cluster``."""
         from scarf_spark.ml.cluster import label_propagation
 
-        lab = label_propagation(self._require_graph(), n_iter=n_iter).select(
+        lab = label_propagation(self.edges, n_iter=n_iter, sym=self._symmetric()).select(
             F.col("node").alias("cell_id"),
             F.col("cluster").alias(f"{self.assay}_leiden_cluster"),
         )
@@ -408,7 +421,7 @@ class ScarfDataStore:
         if source_node is None:
             source_node = edges.agg(F.min("src")).collect()[0][0]
         out = harmonic_potential(
-            edges, source_node=int(source_node), n_iter=n_iter
+            edges, source_node=int(source_node), n_iter=n_iter, sym=self._symmetric()
         ).select(
             F.col("node").alias("cell_id"),
             F.col("pseudotime").alias(f"{self.assay}_pseudotime"),
@@ -424,7 +437,7 @@ class ScarfDataStore:
         :meth:`run_umap`; lands as ``{assay}_spectral1..N``."""
         from scarf_spark.ml.embed import spectral_embedding
 
-        emb = spectral_embedding(self._require_graph(), dims=dims, n_iter=n_iter)
+        emb = spectral_embedding(self.edges, dims=dims, n_iter=n_iter, sym=self._symmetric())
         out = emb.select(
             F.col("node").alias("cell_id"),
             *[
@@ -446,11 +459,10 @@ class ScarfDataStore:
             cap_per_cluster=cap_per_cluster,
         ).select("cell_id", F.lit(True).alias(f"{self.assay}_sketched"))
         self._set_cell_cols(kept)
-        self.cells = self.cells.withColumn(
+        return self._update(cells=self.cells.withColumn(
             f"{self.assay}_sketched",
             F.coalesce(F.col(f"{self.assay}_sketched"), F.lit(False)),
-        )
-        return self
+        ))
 
     def metric_lisi(self, label_key: str, perplexity: float = 5.0) -> DataFrame:
         """``datastore.py:2063-2141``: per-cell LISI over the graph."""

@@ -316,6 +316,20 @@ def test_spectral_embedding_fails_loud_when_dims_too_large(spark):
         spectral_embedding(e1, dims=2, n_iter=2)
 
 
+def test_graph_operators_on_empty_edge_table(spark):
+    """An empty graph goes through the shared symmetric prologue: the
+    two spectral operators fail loud by name, label propagation
+    returns no rows."""
+    from scarf_spark.ml.embed import spectral_embedding
+
+    e0 = spark.createDataFrame([], "src long, dst long, weight double")
+    with pytest.raises(ValueError, match=r"spectral_embedding: need more nodes \(0\)"):
+        spectral_embedding(e0, dims=2, n_iter=2)
+    with pytest.raises(ValueError, match="harmonic_potential: need >= 2 nodes, got 0"):
+        pseudotime.harmonic_potential(e0, source_node=0, n_iter=2)
+    assert cluster.label_propagation(e0, n_iter=2).count() == 0
+
+
 def test_zscore_gram_matches_two_pass_chain(spark, sf_dir):
     """The fused one-pass zscore_gram must reproduce the
     zscore_vectors -> pca_fit chain: z bit-equal (identical param

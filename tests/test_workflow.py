@@ -128,3 +128,90 @@ def test_round9_reference_surface(wf, tmp_path):
     out = wf.to_anndata(str(tmp_path / "export.h5ad"))
     import os
     assert os.path.getsize(out) > 0
+
+
+# ---- one analyst session, each graph step under its own job group -----
+
+# jobs per facade step at sf0.001 (local[8]): the counts with each
+# state replacement cut once and the symmetric prologue shared
+# (25 / 11 / 21 / 39) plus slack, under the counts of the facade that
+# re-derived them (35 / 15 / 37 / 44) — a step that goes back to
+# rebuilding the HVG set, the cell table or its own symmetric graph
+# overshoots its bound.
+JOB_BUDGET = {
+    "make_graph": 29,
+    "run_leiden_clustering": 13,
+    "run_spectral_embedding": 23,
+    "run_pseudotime_distributed": 41,
+}
+
+
+@pytest.fixture(scope="module")
+def session(spark, sf_dir):
+    """A fresh session (no registry) through the graph steps; returns
+    the store and the number of Spark jobs each step ran."""
+    sc = spark.sparkContext
+    ds = ScarfDataStore(spark, sf_dir=sf_dir)
+    ds.auto_filter_cells(["n_counts"]).mark_hvgs(top_n=20)
+    ds.feats.where("hvgs").count()
+    steps = {
+        "make_graph": lambda: ds.make_graph(dims=5, k=5).count(),
+        "run_leiden_clustering": lambda: ds.run_leiden_clustering(n_iter=2).cells.count(),
+        "run_spectral_embedding": lambda: ds.run_spectral_embedding(dims=2, n_iter=2).cells.count(),
+        "run_pseudotime_distributed": lambda: ds.run_pseudotime_distributed(n_iter=4).cells.count(),
+    }
+    jobs = {}
+    for name, run in steps.items():
+        group = f"test_workflow.{name}.{id(ds)}"
+        sc.setJobGroup(group, name)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return ds, jobs
+
+
+def test_job_budget_per_graph_step(session):
+    _ds, jobs = session
+    over = {s: (n, JOB_BUDGET[s]) for s, n in jobs.items() if not 0 < n <= JOB_BUDGET[s]}
+    assert not over, f"(jobs, budget) per step: {over}"
+
+
+def test_graph_steps_match_direct_operator_calls(session):
+    """The shared prologue changes where the symmetric graph is
+    materialized, never a value: the facade's columns equal the three
+    operators called directly on the same edges, each building its own
+    prologue."""
+    from scarf_spark.ml.cluster import label_propagation
+    from scarf_spark.ml.embed import spectral_embedding
+    from scarf_spark.ml.pseudotime import harmonic_potential
+
+    ds, _jobs = session
+    edges = ds.edges
+    src = edges.agg(F.min("src")).first()[0]
+    direct = (
+        label_propagation(edges, n_iter=2)
+        .join(spectral_embedding(edges, dims=2, n_iter=2), "node")
+        .join(harmonic_potential(edges, source_node=src, n_iter=4), "node")
+    )
+    facade = ds.cells.where("RNA_leiden_cluster IS NOT NULL").select(
+        "cell_id", "RNA_leiden_cluster", "RNA_spectral1", "RNA_spectral2", "RNA_pseudotime"
+    )
+    want = sorted(tuple(r) for r in direct.select("node", "cluster", "e1", "e2", "pseudotime").collect())
+    got = sorted(tuple(r) for r in facade.collect())
+    assert len(got) > 0 and got == want
+
+
+def test_cell_table_is_the_one_pass_qc(spark, session):
+    from scarf_spark.operators import qc
+
+    counts = session[0].counts
+    old = (
+        qc.ncounts_per_cell(counts)
+        .join(qc.nfeatures_per_cell(counts), "cell_id")
+        .withColumn("I", F.lit(True))
+    )
+    new = ScarfDataStore(spark, counts=counts).cells
+    assert sorted(new.select(*old.columns).collect()) == sorted(old.collect())
