@@ -1,17 +1,20 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: times every registered query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], first as a
+4-thread concurrent stream, then the frozen PINNED set serially. It
+prints the full JSON record {"queries": {name: sec}, ..., "metric":
+"pinned_wall_sec", "value": sec, "unit": "sec", ..., "sf": ...} and
+then, as the last line, the same record cut to fit a 2 KB tail.
 
 Each query is forced end-to-end with a noop sink (full execution, no
-collect overhead) after a warm-up of the shared input scans.
+collect overhead) after a warm-up of the shared input scans. The value
+is a raw wall-clock sum, comparable only between runs on the same host;
+A/B claims come from interleaved perfbench/ runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import platform
 import sys
 import time
 
@@ -37,13 +40,11 @@ HEADLINE = [
 # same methodology — a 1.66x spread from sandbox neighbors, larger
 # than any genuine regression in the record. The graded number is now
 # the SUM OF SERIAL BEST-OF-3 TIMES over this FIXED query set (one
-# representative per operator family, heavies included), DIVIDED by
-# the run's common-mode machine slowdown (see PINNED_REF_PATH below):
-# serial execution removes queue-time misattribution, rep-major
-# best-of-3 removes transient co-tenant spikes, the slowdown divisor
-# cancels load episodes that outlast a whole run, and the fixed
-# membership makes the sum comparable across rounds regardless of how
-# many new queries land.
+# representative per operator family, heavies included): serial
+# execution removes queue-time misattribution, rep-major best-of-3
+# removes transient co-tenant spikes, and the fixed membership makes
+# the sum comparable across runs regardless of how many new queries
+# land.
 # MEMBERSHIP IS APPEND-ONLY FROZEN — removing or swapping a query
 # breaks the round-over-round series; if one must change, record both
 # sums for one round.
@@ -84,8 +85,7 @@ PINNED = [
     # round-15 appends: the last heavy stream entries without serial
     # twins (the r14 verdict's item 4 — ml_lsi's stream time doubled
     # r13→r14 and nothing could attribute it). Their serial best-of-3
-    # now lands in every run; ref entries join the committed vector
-    # via the normal proposal→promotion path.
+    # now lands in every run.
     "ml_lsi", "mark_chi2", "pipe_mm_prep",
     # round-16 appends (r15 verdict item 6): the heaviest remaining
     # stream-only entries on a QUIET box (dedup_lsh_recall 16.8s,
@@ -97,57 +97,16 @@ PINNED = [
 ]
 
 
-# Reference vector for the contention-proof headline: per-query
-# clean-machine times (the min across this round's recorded runs),
-# committed in BENCH_PINNED_REF.json. Each run's common-mode machine
-# slowdown is estimated as the MEDIAN over pinned queries of
-# (this run's best-of-N wall / reference), capped below at 1.0, and
-# the headline is the raw pinned wall sum divided by it. Rationale,
-# validated on 9 recorded same-code sf0.1 runs: raw best-of-3 wall
-# sums spread 22.7% (co-tenant load episodes outlast a whole run),
-# process-tree CPU spread 27.5% (SMT-shared cores charge contention
-# to CPU time too), a synthetic range-sum probe spread MORE than the
-# queries it was meant to calibrate — but the median per-query ratio
-# tracks the load episode exactly (it IS the affected workload), and
-# with a frozen reference the held-out spread drops to 6-7%. A
-# genuine regression in one query moves its own ratio, not the
-# median; a uniform genuine speedup pushes the median below the 1.0
-# cap and shows up undivided. Runs that beat a reference entry LOWER
-# it (high-water-mark tightening toward true clean-machine times).
-PINNED_REF_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_PINNED_REF.json"
-)
-# Ref-vector POLICY (round 13): runs never rewrite the committed
-# reference. Each run writes its tightening PROPOSAL (gitignored) and
-# the promotion is an explicit once-per-round step — after the
-# driver's graded run — via tools/promote_pinned_ref.py, so every run
-# within a round normalizes against the SAME committed vector.
-# Proposals are only emitted from runs measured at ~clean machine
-# (slowdown <= 1.05): a loaded run can't tighten anything by
-# construction, and an anomalously cache-warm outlier is bounded by
-# the 0.5x single-step tightening floor below.
-PINNED_PROPOSED_PATH = PINNED_REF_PATH.replace(".json", ".proposed.json")
-
-
-# Key under which the host fingerprint is stored inside the committed
-# ref vector (ignored by the per-query ratio math — pinned_times never
-# contains it).
-HOST_PROBE_KEY = "__host_probe_sec__"
-# CPython version stamped beside the probe (r14 ADVICE): the pure-python
-# loop half of the probe moves with the interpreter build, not just the
-# host — an interpreter change could otherwise flip a genuine broad
-# engine regression from SUSPECT-ENGINE to HOST and mask it. When the
-# running interpreter differs from the one stamped in the ref vector the
-# triage refuses the HOST verdict (falls through to SUSPECT-ENGINE) and
-# the operator must re-baseline deliberately.
-HOST_PROBE_PY_KEY = "__host_probe_py__"
+# Stream concurrency, and serial reps per pinned query (best-of).
+THREADS = 4
+PINNED_REPS = 3
 
 
 def steal_pct(interval: float = 0.25) -> float | None:
     """Percent of CPU time stolen by the hypervisor over a short
     sample (field 8 of /proc/stat's aggregate cpu line) — direct
     co-tenant-contention evidence stamped beside load1 (r15 verdict
-    item 7: a LOAD-flagged run dominated the round-over-round read
+    item 7: a loaded run dominated the round-over-round read
     because nothing recorded how contended the box actually was).
     Returns None when /proc/stat is unavailable or malformed."""
     try:
@@ -165,150 +124,41 @@ def steal_pct(interval: float = 0.25) -> float | None:
         return None
 
 
-def host_probe(reps: int = 3) -> float:
-    """Deterministic single-thread fixed-work probe — a HOST
-    fingerprint, never a divisor (round 13 demonstrated live that
-    start-of-run load1 is blind to a CPU-generation/clock difference
-    at idle: a fresh 1.5x-slower VM fired SUSPECT-ENGINE twice on what
-    manual triage proved was host speed). Two serial kernels cover the
-    two speeds that matter: a pure-python loop (interpreter + branch
-    speed) and sha256 over a fixed buffer (single-core C throughput).
-    Best-of-reps so a transient co-tenant spike can't move the
-    fingerprint; the work is fixed, so on the SAME machine the value
-    is stable run-over-run and a moved fingerprint means the machine
-    changed."""
-    import hashlib
-
-    best = float("inf")
-    buf = bytes(1 << 20)
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(1_500_000):
-            acc = (acc * 1103515245 + i) & 0xFFFFFFFF
-        h = hashlib.sha256()
-        for _ in range(192):  # 192 MiB
-            h.update(buf)
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def normalize_pinned(
-    pinned_times: dict,
-    ref: dict,
-    expected: list,
-    load1_start: float,
-    ncpu: int,
-    probe_sec: float | None = None,
-    probe_py: str | None = None,
-) -> dict:
-    """Pure normalization + regression triage for the pinned headline
-    (factored out so the triage rules are unit-testable without a
-    Spark run).
-
-    The median-ratio divisor mathematically CANNOT distinguish "every
-    query 1.3x slower because the machine is loaded" from "every query
-    1.3x slower because a session default regressed" — a uniform
-    engine regression raises the median and is divided out of the
-    headline. So alongside the normalized value this emits a verdict:
-
-    * ``SUSPECT-ENGINE`` — broad slowdown (median ratio > 1.15, or
-      >=1/4 of pinned queries individually >1.3x ref) while the
-      machine looked idle when the run STARTED (load1 < 0.2*ncpu;
-      start-of-run load, because the bench's own executors dominate
-      load1 by the end) AND the host fingerprint matches the one
-      recorded with the ref vector — a uniform regression would look
-      exactly like this, investigate before trusting the normalized
-      number.
-    * ``HOST`` — same broad-slowdown-at-idle signature, but the
-      single-thread fixed-work fingerprint (``probe_sec``) is >1.2x
-      the ``__host_probe_sec__`` recorded in the ref vector: the
-      machine itself is slower per-core than the one the ref was
-      measured on (new VM / CPU generation), so the slowdown is the
-      host's, not the engine's. One-sided by design: a FASTER host
-      with a broad slowdown stays SUSPECT-ENGINE. Re-baseline via
-      tools/promote_pinned_ref.py --rebaseline when this persists.
-    * ``LOAD`` — same slowdown signature but the box was visibly busy
-      at start: normalization is doing its job.
-    * ``NO-PINNED`` — nothing measured; the normalized headline is
-      meaningless, value is None and callers fall back to stream wall.
-    * ``ok`` — otherwise.
-
-    Returns {value, pinned_wall_sec, slowdown, n_over_130, pinned_n,
-    pinned_missing, regression_flag, proposal}; ``proposal`` is the
-    tightened ref vector to write to PINNED_PROPOSED_PATH (None unless
-    this run qualifies to tighten). Tightening guards (ADVICE r12):
-    only near-clean runs propose (slowdown <= 1.05), sub-50ms ref
-    entries never tighten further (they'd inflate every future
-    slowdown estimate), and one run can tighten an entry by at most 2x
-    (t >= 0.5*ref) so a single cache-warm anomaly can't poison the
-    series."""
-    out = {
-        "pinned_wall_sec": round(sum(pinned_times.values()), 3),
+def headline(pinned_times: dict, expected: list, stream_wall: float) -> dict:
+    """The summary fields of the bench line. The headline is the raw
+    pinned best-of-N wall sum; when no pinned query ran it falls back
+    to the stream wall under a distinct metric name, so a degenerate
+    0.0 can never enter the pinned series."""
+    pinned_wall = round(sum(pinned_times.values()), 3)
+    return {
+        "metric": "pinned_wall_sec" if pinned_times else "stream_wall_sec_fallback",
+        "value": pinned_wall if pinned_times else stream_wall,
+        "unit": "sec",
         "pinned_n": len(pinned_times),
-        "slowdown": 1.0,
-        "n_over_130": 0,
         "pinned_missing": sorted(set(expected) - set(pinned_times)),
-        "proposal": None,
+        "pinned_wall_sec": pinned_wall,
     }
-    if not pinned_times:
-        out["value"] = None
-        out["regression_flag"] = "NO-PINNED"
-        return out
-    ratios = sorted(
-        pinned_times[n] / ref[n]
-        for n in pinned_times
-        if n in ref and ref[n] > 0.05
-    )
-    slowdown = max(1.0, ratios[len(ratios) // 2]) if ratios else 1.0
-    out["slowdown"] = round(slowdown, 3)
-    out["value"] = round(out["pinned_wall_sec"] / slowdown, 3)
-    out["n_over_130"] = sum(r > 1.3 for r in ratios)
-    probe_ref = ref.get(HOST_PROBE_KEY)
-    if probe_sec and probe_ref:
-        out["host_probe_ratio"] = round(probe_sec / probe_ref, 3)
-    broad = slowdown > 1.15 or (
-        ratios and out["n_over_130"] >= max(3, len(ratios) // 4)
-    )
-    if not broad:
-        out["regression_flag"] = "ok"
-    elif load1_start >= 0.2 * ncpu:
-        out["regression_flag"] = "LOAD"
-    elif (
-        probe_sec
-        and probe_ref
-        and probe_sec > 1.2 * probe_ref
-        # a probe moved by a different interpreter build is not evidence
-        # the HOST changed — stay SUSPECT-ENGINE until re-baselined
-        and (
-            ref.get(HOST_PROBE_PY_KEY) is None
-            or probe_py is None
-            or probe_py == ref.get(HOST_PROBE_PY_KEY)
-        )
-    ):
-        out["regression_flag"] = "HOST"
-    else:
-        out["regression_flag"] = "SUSPECT-ENGINE"
-    if slowdown <= 1.05:
-        proposal = dict(ref)
-        for n, t in pinned_times.items():
-            if n not in proposal:
-                proposal[n] = t
-            elif proposal[n] > 0.05 and t < proposal[n]:
-                # one promotion tightens an entry by at most 2x — CLAMP
-                # to the half-way floor rather than skipping (r15 left
-                # ml_pca_project's ref 4x above its demonstrated time
-                # forever because a >2x genuine improvement was
-                # "rejected" every round). A cache-warm anomaly still
-                # can't poison the series: its damage is bounded to one
-                # 2x step per explicit once-per-round promotion, it
-                # inflates only that entry's own ratio (the median
-                # headline is unaffected), and the diff is reviewed at
-                # promotion time.
-                proposal[n] = round(max(t, 0.5 * proposal[n]), 3)
-        if proposal != ref:
-            out["proposal"] = proposal
-    return out
+
+
+def tail_line(out: dict) -> str:
+    """The last stdout line, sized for a 2 KB tail window: every
+    summary field and the full pinned map, then as many stream entries
+    as fit, heaviest first; ``n_omitted`` counts the dropped ones, so
+    truncation only ever drops the sub-noise cheap queries."""
+    times = out["queries"]
+    summary = {
+        k: v for k, v in out.items() if k not in ("queries", "serial_confirm")
+    }
+    summary["queries"] = {}
+    budget = 1900 - len(json.dumps(summary, separators=(",", ":")))
+    for name in sorted(times, key=times.get, reverse=True):
+        entry = len(name) + len(f"{times[name]:.2f}") + 5
+        if budget - entry < 0:
+            summary["n_omitted"] = len(times) - len(summary["queries"])
+            break
+        summary["queries"][name] = round(times[name], 2)
+        budget -= entry
+    return json.dumps(summary, separators=(",", ":"))
 
 
 def run_one(spark, fn, sf_dir: str) -> float:
@@ -322,13 +172,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     # co-tenant load BEFORE any Spark work: by the end of a run our own
-    # executors dominate load1, so the regression triage keys off this
+    # executors dominate load1
     load1_start = round(os.getloadavg()[0], 1)
-    # host fingerprint BEFORE any Spark work, for the same reason:
-    # measured at the quietest point of the run (triage only, never a
-    # divisor — see host_probe)
-    probe_sec = host_probe()
-    probe_py = platform.python_version()
     steal_start = steal_pct()
     spark = get_spark("scarf-bench")
     qs = entry_mod.queries()
@@ -341,11 +186,6 @@ def main() -> None:
     names = [n for n in HEADLINE if n in qs] + [
         n for n in qs if n not in HEADLINE and n not in _EXCLUDED
     ]
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split()
-    if only:
-        names = [n for n in names if n in only] + [
-            n for n in only if n in qs and n not in names
-        ]
     # LPT-style stream schedule: submit the known-heavy queries FIRST
     # so the concurrent stream doesn't end on a single long straggler
     # (classic longest-processing-time bound: wall <= serial/threads +
@@ -435,12 +275,11 @@ def main() -> None:
     # how a shared cluster actually runs): a small thread pool submits
     # queries concurrently into the one Spark session, so the scheduler
     # fills the gaps each small query's serial stages would leave idle.
-    # value = WALL CLOCK of the whole stream; serial_sum preserves the
+    # stream_wall_sec = WALL CLOCK of the whole stream; serial_sum keeps the
     # per-query-latency view (per-query numbers overlap under
     # concurrency, so their sum exceeds the wall time).
     from concurrent.futures import ThreadPoolExecutor
 
-    n_threads = int(os.environ.get("SPARK_GRAFT_BENCH_THREADS", "4"))
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
 
@@ -461,12 +300,8 @@ def main() -> None:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
     t_wall = time.time()
-    if n_threads <= 1:
-        for name in names:
-            _run(name)
-    else:
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
-            list(pool.map(_run, names))
+    with ThreadPoolExecutor(max_workers=THREADS) as pool:
+        list(pool.map(_run, names))
     wall = round(time.time() - t_wall, 3)
     serial_sum = round(sum(times.values()), 3)
     # Pinned serial phase (round 12, the HEADLINE — see PINNED above):
@@ -481,94 +316,37 @@ def main() -> None:
     # re-runs.
     pinned_times: dict[str, float] = {}
     names_p = [n for n in PINNED if n in qs]
-    if os.environ.get("SPARK_GRAFT_BENCH_PINNED", "1") != "0":
-        reps = int(os.environ.get("SPARK_GRAFT_BENCH_PINNED_REPS", "3"))
-        for _ in range(reps):
-            for name in names_p:
-                if f"pinned:{name}" in errors:
-                    continue
-                try:
-                    t = run_one(spark, qs[name], sf_dir)
-                except Exception as exc:  # noqa: BLE001
-                    errors[f"pinned:{name}"] = str(exc).split("\n")[0][:200]
-                    continue
-                if name not in pinned_times or t < pinned_times[name]:
-                    pinned_times[name] = round(t, 3)
-    # Common-mode load correction against the COMMITTED reference
-    # vector (read-only here; see the ref-vector policy at
-    # PINNED_PROPOSED_PATH — tightening goes to the gitignored
-    # proposal file, promotion is an explicit once-per-round commit).
-    try:
-        with open(PINNED_REF_PATH) as fh:
-            ref = json.load(fh)
-    except (OSError, ValueError) as exc:
-        print(f"pinned ref unavailable: {exc}", file=sys.stderr)
-        ref = {}
-    # Loaded-run retry (r15 verdict item 7): when the run STARTED on a
-    # visibly busy box (the same load1 threshold the LOAD triage
-    # uses), give each >1.3x-vs-ref pinned entry ONE more sample now —
-    # minutes after the stream drained, typically the quietest point of
-    # the run — and keep the min. A co-tenant episode at start can then
-    # no longer dominate the round-over-round read; on a quiet box this
-    # block is a no-op, so quiet-run numbers are untouched.
-    n_retried = 0
-    if pinned_times and load1_start >= 0.2 * (os.cpu_count() or 1):
+    for _ in range(PINNED_REPS):
         for name in names_p:
-            r = ref.get(name)
-            if (
-                name in pinned_times
-                and isinstance(r, (int, float))
-                and r > 0.05
-                and pinned_times[name] / r > 1.3
-            ):
-                try:
-                    t = run_one(spark, qs[name], sf_dir)
-                except Exception as exc:  # noqa: BLE001
-                    errors[f"retry:{name}"] = str(exc).split("\n")[0][:200]
-                    continue
-                n_retried += 1
-                if t < pinned_times[name]:
-                    pinned_times[name] = round(t, 3)
-    norm = normalize_pinned(
-        pinned_times, ref, names_p, load1_start, os.cpu_count() or 1,
-        probe_sec=probe_sec,
-        probe_py=probe_py,
-    )
-    if norm["pinned_missing"]:
+            if f"pinned:{name}" in errors:
+                continue
+            try:
+                t = run_one(spark, qs[name], sf_dir)
+            except Exception as exc:  # noqa: BLE001
+                errors[f"pinned:{name}"] = str(exc).split("\n")[0][:200]
+                continue
+            if name not in pinned_times or t < pinned_times[name]:
+                pinned_times[name] = round(t, 3)
+    head = headline(pinned_times, names_p, wall)
+    if head["pinned_missing"]:
         print(
-            f"warning: {len(norm['pinned_missing'])} pinned queries "
-            f"missing ({norm['pinned_missing']}) — pinned_wall_sec is "
-            "not comparable to rounds with the full set",
+            f"warning: {len(head['pinned_missing'])} pinned queries "
+            f"missing ({head['pinned_missing']}) — pinned_wall_sec is "
+            "not comparable to runs with the full set",
             file=sys.stderr,
         )
-    # The committed ref vector is sf0.1-scoped (every committed entry
-    # was measured at sf0.1) — a qualifying run at a SMALLER sf would
-    # otherwise propose its faster small-scale times as "tightenings"
-    # and poison the series at the next promotion (observed live with
-    # an sf0.01 smoke run in r16). Proposals only from the ref's scale.
-    if norm["proposal"] is not None and sf == 0.1:
-        try:
-            with open(PINNED_PROPOSED_PATH, "w") as fh:
-                json.dump(norm["proposal"], fh, indent=1, sort_keys=True)
-        except OSError:
-            pass
     # Serial confirm (round 11, kept as a diagnostic): re-time the
     # most expensive stream entries NOT already covered by the pinned
     # set, so apparent stream regressions can still be deflated to
     # queueing vs real cost.
     serial_confirm: dict[str, float] = {}
-    if n_threads > 1 and os.environ.get(
-        "SPARK_GRAFT_BENCH_SERIAL_CONFIRM", "1"
-    ) != "0":
-        for name in sorted(times, key=times.get, reverse=True)[:10]:
-            if name in pinned_times:
-                continue
-            try:
-                serial_confirm[name] = round(
-                    run_one(spark, qs[name], sf_dir), 3
-                )
-            except Exception as exc:  # noqa: BLE001
-                errors[f"confirm:{name}"] = str(exc).split("\n")[0][:200]
+    for name in sorted(times, key=times.get, reverse=True)[:10]:
+        if name in pinned_times:
+            continue
+        try:
+            serial_confirm[name] = round(run_one(spark, qs[name], sf_dir), 3)
+        except Exception as exc:  # noqa: BLE001
+            errors[f"confirm:{name}"] = str(exc).split("\n")[0][:200]
     # KEY ORDER MATTERS: the driver records only the last ~2 KB of
     # stdout ("tail" in BENCH_r{N}.json), so the per-query map goes
     # FIRST and the summary metrics go LAST — any suffix window then
@@ -584,35 +362,10 @@ def main() -> None:
         out["pinned"] = pinned_times
     out.update(
         {
-            # HEADLINE (r12, replaces headline_stream_wall): the
-            # frozen PINNED set's best-of-3 serial wall sum, divided
-            # by this run's common-mode machine slowdown (median
-            # per-query ratio vs BENCH_PINNED_REF.json, capped at
-            # >= 1). See the PINNED/PINNED_REF_PATH comments for the
-            # measured failure modes of raw wall (22.7% spread), CPU
-            # (27.5%) and probe normalization that led here; frozen-
-            # ref validation: 6-7% held-out spread. pinned_wall_sec
-            # and the stream wall stay recorded as the uncorrected
-            # latency / throughput views.
-            # When no pinned query ran (all errored, or the phase was
-            # disabled) the normalized headline is meaningless: fall
-            # back to the stream wall under a DISTINCT metric name so
-            # a degenerate 0.0 "best ever" can't enter the series.
-            "metric": (
-                "pinned_norm_sec" if norm["value"] is not None
-                else "stream_wall_sec_fallback"
-            ),
-            "value": norm["value"] if norm["value"] is not None else wall,
-            "unit": "sec",
-            "pinned_n": norm["pinned_n"],
-            "pinned_missing": norm["pinned_missing"],
-            "slowdown": norm["slowdown"],
-            # triage for the divisor's blind spot: a UNIFORM engine
-            # regression is indistinguishable from machine load by
-            # construction — this flag says which story the evidence
-            # supports (see normalize_pinned)
-            "regression_flag": norm["regression_flag"],
-            "n_over_130": norm["n_over_130"],
+            # HEADLINE: the frozen PINNED set's raw best-of-3 serial
+            # wall sum (see headline); the stream wall and per-query
+            # times ride along as the throughput view
+            **head,
             "load1_start": load1_start,
             # quiet/steal markers (r15 verdict item 7, additive only):
             # end-of-run load + hypervisor steal samples let the next
@@ -621,21 +374,12 @@ def main() -> None:
             "load1_end": round(os.getloadavg()[0], 1),
             **({"steal_pct_start": steal_start} if steal_start is not None else {}),
             **(lambda s: {"steal_pct_end": s} if s is not None else {})(steal_pct()),
-            **({"pinned_retried": n_retried} if n_retried else {}),
-            "host_probe_sec": probe_sec,
-            "host_probe_py": probe_py,
-            **(
-                {"host_probe_ratio": norm["host_probe_ratio"]}
-                if "host_probe_ratio" in norm
-                else {}
-            ),
-            "pinned_wall_sec": norm["pinned_wall_sec"],
             "stream_wall_sec": wall,
             # the benched set GROWS as operators land (27 queries in
             # r3, 89 by r7): compare stream walls via sec_per_query
             "n_queries": len(times),
             "sec_per_query": round(wall / max(len(times), 1), 3),
-            "threads": n_threads,
+            "threads": THREADS,
             "serial_sum_sec": serial_sum,
             "sf": sf,
         }
@@ -671,21 +415,7 @@ def main() -> None:
     # sub-noise cheap queries, keeping rounds comparable from the
     # driver artifact alone.
     print(line)
-    # the headline metrics + the full pinned map (the graded series)
-    # take priority in the 2 KB window; stream entries fill what's left
-    summary = {
-        k: v for k, v in out.items() if k not in ("queries", "serial_confirm")
-    }
-    summary["queries"] = {}
-    budget = 1900 - len(json.dumps(summary, separators=(",", ":")))
-    for name in sorted(times, key=times.get, reverse=True):
-        entry = len(name) + len(f'{times[name]:.2f}') + 5
-        if budget - entry < 0:
-            summary["n_omitted"] = len(times) - len(summary["queries"])
-            break
-        summary["queries"][name] = round(times[name], 2)
-        budget -= entry
-    print(json.dumps(summary, separators=(",", ":")))
+    print(tail_line(out))
 
 
 # Queries deliberately NOT benchmarked, each with the reason. Everything

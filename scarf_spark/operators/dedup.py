@@ -119,26 +119,6 @@ def minhash_signatures_wide(
     return shingles.groupBy(id_col).agg(*aggs)
 
 
-def lsh_band_buckets(
-    sigs: DataFrame, n_bands: int = 4, rows_per_band: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """Band the signature (seed // rows_per_band) and hash each band's
-    concatenated minhashes (seed order) into a bucket key:
-    (doc_id, band, bucket). Accepts the long (doc_id, seed, mh) form."""
-    banded = sigs.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-    return (
-        banded.groupBy(id_col, "band")
-        .agg(F.sort_array(F.collect_list(F.struct("seed", "mh"))).alias("_s"))
-        .select(
-            id_col,
-            "band",
-            F.md5(
-                F.concat_ws("_", F.transform(F.col("_s"), lambda s: s["mh"].cast("string")))
-            ).alias("bucket"),
-        )
-    )
-
-
 def lsh_band_buckets_wide(
     wide: DataFrame, n_hashes: int = 8, n_bands: int = 4, id_col: str = "doc_id"
 ) -> DataFrame:

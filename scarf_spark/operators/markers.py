@@ -229,24 +229,6 @@ def feature_module_knn(
     )
 
 
-def feature_modules(
-    counts: DataFrame,
-    cell_order: DataFrame,
-    n_bins: int = 10,
-    k: int = 5,
-    n_iter: int = 3,
-    order_col: str = "x",
-) -> DataFrame:
-    """Feature-module clustering (``scarf/markers.py:323-439``, step 2):
-    label propagation over the feature-KNN graph (the reference runs
-    Paris there; label prop is the distributed-native equivalent,
-    SURVEY.md §2.10). Returns (node=feat_id, cluster)."""
-    from scarf_spark.ml.cluster import label_propagation
-
-    edges = feature_module_knn(counts, cell_order, n_bins=n_bins, k=k, order_col=order_col)
-    return label_propagation(edges, n_iter=n_iter)
-
-
 def marker_chi2(
     counts: DataFrame, groups: DataFrame, group_col: str = "grp"
 ) -> DataFrame:

@@ -63,14 +63,6 @@ def set_subtract(df: DataFrame, remove: DataFrame, key: str) -> DataFrame:
     return df.join(F.broadcast(remove.select(key)), key, "left_anti")
 
 
-def edge_union(edges_a: DataFrame, edges_b: DataFrame) -> DataFrame:
-    """SNN/WNN edge-set union per node (``knn_utils.py:342``):
-    union + dedup on (src, dst)."""
-    return edges_a.select("src", "dst").union(edges_b.select("src", "dst")).dropDuplicates(
-        ["src", "dst"]
-    )
-
-
 def set_intersect(df: DataFrame, other: DataFrame, key: str) -> DataFrame:
     """Key intersection as a LEFT SEMI join — the selection twin of
     :func:`set_subtract` (reference: boolean-index AND over cell keys,

@@ -1,12 +1,13 @@
-"""Unit tests for bench.py's pinned-headline normalization triage
-(normalize_pinned): the uniform-regression guard, the empty-pinned
-fallback, and the ref-tightening proposal policy (round-13 items 3+5,
-plus the two r12 ADVICE hazards on bench.py)."""
+"""Unit tests for bench.py's headline and tail line (no Spark run), and
+for tools/parse_eventlog.py's reading of rolling event logs."""
 
 import importlib.util
+import json
 import os
 
-import pytest
+import pyarrow as pa
+
+from tools import parse_eventlog
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
@@ -15,191 +16,107 @@ _spec = importlib.util.spec_from_file_location(
 bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
 
-REF = {f"q{i}": 1.0 for i in range(20)}
-NAMES = sorted(REF)
+NAMES = sorted(f"q{i}" for i in range(20))
 
 
-def test_clean_run_ok_and_proposes_tightening():
-    times = {n: 0.9 if n == "q0" else 1.0 for n in NAMES}
-    out = bench.normalize_pinned(times, REF, NAMES, load1_start=0.5, ncpu=32)
-    assert out["regression_flag"] == "ok"
-    assert out["slowdown"] == 1.0
-    assert out["value"] == out["pinned_wall_sec"]
+def test_full_pinned_headline_is_raw_wall():
+    times = {n: 1.0 for n in NAMES}
+    times["q0"] = 0.25
+    out = bench.headline(times, NAMES, stream_wall=300.0)
+    assert out["metric"] == "pinned_wall_sec"
+    assert out["value"] == out["pinned_wall_sec"] == 19.25
+    assert out["pinned_n"] == 20
     assert out["pinned_missing"] == []
-    # near-clean run (slowdown <= 1.05) proposes the q0 tightening
-    assert out["proposal"]["q0"] == 0.9
-    assert out["proposal"]["q1"] == 1.0
-
-
-def test_uniform_regression_on_idle_box_is_suspect_engine():
-    # every query 1.3x slower, machine idle at start: the median-ratio
-    # divisor would silently normalize this away — the flag must fire
-    times = {n: 1.3 for n in NAMES}
-    out = bench.normalize_pinned(times, REF, NAMES, load1_start=1.0, ncpu=32)
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
-    assert out["slowdown"] == pytest.approx(1.3)
-    assert out["n_over_130"] == 0  # exactly 1.3 is the boundary
-    # the normalized value still divides it out — the flag is the signal
-    assert out["value"] == pytest.approx(len(NAMES) * 1.0, abs=0.01)
-    # loaded run never proposes tightening
-    assert out["proposal"] is None
-
-
-def test_same_regression_on_busy_box_is_load():
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(times, REF, NAMES, load1_start=20.0, ncpu=32)
-    assert out["regression_flag"] == "LOAD"
-
-
-def test_broad_minority_regression_fires_without_median_shift():
-    # 6 of 20 queries at 2x (median untouched at 1.0): per-query count
-    # rule fires where the median rule cannot
-    times = {n: (2.0 if i < 6 else 1.0) for i, n in enumerate(NAMES)}
-    out = bench.normalize_pinned(times, REF, NAMES, load1_start=0.5, ncpu=32)
-    assert out["slowdown"] == 1.0
-    assert out["n_over_130"] == 6
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
 
 
 def test_empty_pinned_yields_no_headline():
-    out = bench.normalize_pinned({}, REF, NAMES, load1_start=0.5, ncpu=32)
-    assert out["value"] is None
-    assert out["regression_flag"] == "NO-PINNED"
+    out = bench.headline({}, NAMES, stream_wall=300.0)
+    assert out["metric"] == "stream_wall_sec_fallback"
+    assert out["value"] == 300.0
+    assert out["pinned_n"] == 0
     assert out["pinned_missing"] == NAMES
 
 
 def test_partial_pinned_reports_missing():
     times = {n: 1.0 for n in NAMES[:5]}
-    out = bench.normalize_pinned(times, REF, NAMES, load1_start=0.5, ncpu=32)
+    out = bench.headline(times, NAMES, stream_wall=300.0)
+    assert out["metric"] == "pinned_wall_sec"
+    assert out["value"] == 5.0
     assert out["pinned_missing"] == NAMES[5:]
-    assert out["regression_flag"] == "ok"
 
 
-def test_tightening_guards():
-    # sub-50ms ref entries never tighten; one step tightens <= 2x
-    ref = {"tiny": 0.02, "big": 10.0, "warm": 4.0}
-    times = {"tiny": 0.001, "big": 9.0, "warm": 0.5}
-    out = bench.normalize_pinned(
-        times, ref, sorted(ref), load1_start=0.5, ncpu=32
-    )
-    prop = out["proposal"]
-    assert prop["tiny"] == 0.02  # floor guard
-    assert prop["big"] == 9.0
-    # >2x jump CLAMPS to the half-way floor (r16): a genuine >2x
-    # improvement closes over successive promotions instead of the ref
-    # stalling forever; an anomaly's damage is bounded to one 2x step
-    # per explicit promotion and only inflates that entry's own ratio
-    assert prop["warm"] == 2.0
+def test_tail_line_fits_window_and_keeps_headline():
+    times = {f"stream_query_{i:03d}": round(0.05 + i * 0.031, 3) for i in range(317)}
+    pinned = {n: round(0.5 + i * 0.1, 3) for i, n in enumerate(bench.PINNED)}
+    out = {
+        "queries": times,
+        "serial_confirm": {n: 1.0 for n in list(times)[:10]},
+        "pinned": pinned,
+        **bench.headline(pinned, bench.PINNED, stream_wall=600.0),
+        "load1_start": 0.4,
+        "load1_end": 3.1,
+        "steal_pct_start": 0.0,
+        "steal_pct_end": 1.25,
+        "stream_wall_sec": 600.0,
+        "n_queries": len(times),
+        "sec_per_query": 1.893,
+        "threads": bench.THREADS,
+        "serial_sum_sec": 1800.0,
+        "sf": 0.1,
+    }
+    line = bench.tail_line(out)
+    assert len(line) <= 2000
+    tail = json.loads(line)
+    assert tail["metric"] == "pinned_wall_sec"
+    assert tail["value"] == out["pinned_wall_sec"]
+    assert tail["pinned"] == pinned
+    assert "serial_confirm" not in tail
+    kept = list(tail["queries"])
+    heaviest = sorted(times, key=times.get, reverse=True)
+    assert kept and kept == heaviest[: len(kept)]
+    assert tail["n_omitted"] == len(times) - len(kept) > 0
 
 
-def test_new_queries_enter_proposal_verbatim():
-    ref = {"a": 1.0}
-    times = {"a": 1.0, "b": 3.0}
-    out = bench.normalize_pinned(
-        times, ref, ["a", "b"], load1_start=0.5, ncpu=32
-    )
-    assert out["proposal"] == {"a": 1.0, "b": 3.0}
+def _write_part(path: str, events: list) -> None:
+    data = "".join(json.dumps(ev) + "\n" for ev in events).encode()
+    if path.endswith(".zstd"):
+        with pa.output_stream(path, compression="zstd") as fh:
+            fh.write(data)
+    else:
+        with open(path, "wb") as fh:
+            fh.write(data)
 
 
-# --- host fingerprint triage (round 14): the flag's blind spot was a
-# CPU-generation/clock difference at idle — load1 can't see it, and
-# round 13 fired SUSPECT-ENGINE twice on a host change. The probe is a
-# fingerprint, never a divisor.
-
-REF_FP = {**REF, bench.HOST_PROBE_KEY: 1.0}
-
-
-def test_broad_slowdown_idle_box_fingerprint_unchanged_is_engine():
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=0.5, ncpu=32, probe_sec=1.02
-    )
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
-    assert out["host_probe_ratio"] == 1.02
-
-
-def test_broad_slowdown_idle_box_fingerprint_moved_is_host():
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=0.5, ncpu=32, probe_sec=1.5
-    )
-    assert out["regression_flag"] == "HOST"
-    assert out["host_probe_ratio"] == 1.5
-
-
-def test_faster_host_stays_suspect_engine():
-    # one-sided: a FASTER machine cannot explain a broad slowdown
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=0.5, ncpu=32, probe_sec=0.6
-    )
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
-
-
-def test_busy_box_is_load_regardless_of_fingerprint():
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=20.0, ncpu=32, probe_sec=1.5
-    )
-    assert out["regression_flag"] == "LOAD"
-
-
-def test_missing_probe_ref_falls_back_to_suspect_engine():
-    # pre-fingerprint ref vector: behave exactly as before
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF, NAMES, load1_start=0.5, ncpu=32, probe_sec=1.5
-    )
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
-    assert "host_probe_ratio" not in out
-
-
-def test_probe_key_never_enters_ratio_math():
-    # the dunder key in ref must not perturb slowdown or proposals
-    times = {n: 1.0 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=0.5, ncpu=32, probe_sec=1.0
-    )
-    assert out["slowdown"] == 1.0
-    assert out["regression_flag"] == "ok"
-    # proposal (if any) carries the fingerprint through unchanged
-    if out["proposal"] is not None:
-        assert out["proposal"][bench.HOST_PROBE_KEY] == 1.0
-
-
-def test_interpreter_change_refuses_host_verdict():
-    # r14 ADVICE: the pure-python probe half moves with the CPython
-    # build — a moved fingerprint under a DIFFERENT interpreter is not
-    # host evidence, so the triage stays SUSPECT-ENGINE
-    ref = {**REF_FP, bench.HOST_PROBE_PY_KEY: "3.11.7"}
-    times = {n: 1.4 for n in NAMES}
-    out = bench.normalize_pinned(
-        times, ref, NAMES, load1_start=0.5, ncpu=32,
-        probe_sec=1.5, probe_py="3.12.1",
-    )
-    assert out["regression_flag"] == "SUSPECT-ENGINE"
-    # same interpreter: HOST verdict allowed as before
-    out = bench.normalize_pinned(
-        times, ref, NAMES, load1_start=0.5, ncpu=32,
-        probe_sec=1.5, probe_py="3.11.7",
-    )
-    assert out["regression_flag"] == "HOST"
-    # unstamped (pre-fix) ref vector: behave exactly as before
-    out = bench.normalize_pinned(
-        times, REF_FP, NAMES, load1_start=0.5, ncpu=32,
-        probe_sec=1.5, probe_py="3.12.1",
-    )
-    assert out["regression_flag"] == "HOST"
-
-
-def test_host_probe_is_deterministic_fixed_work():
-    # two timings of the fixed-work probe on the same box agree within
-    # the tolerance the triage threshold assumes (1.2x); also sanity:
-    # sub-10s so it never dominates a bench run
-    # r14 ADVICE: reps=2 flaked under co-tenant load — more reps per
-    # call (best-of keeps determinism) and tolerance matched to the
-    # triage threshold with headroom
-    a = bench.host_probe(reps=4)
-    b = bench.host_probe(reps=4)
-    assert a < 10 and b < 10
-    assert max(a, b) / min(a, b) < 1.3
+def test_rolling_log_parts_read_in_numeric_order(tmp_path, monkeypatch, capsys):
+    # A job that starts in part 2 and ends in part 10: read as strings,
+    # events_10 sorts before events_2 and the job's end is lost.
+    log = tmp_path / "eventlog_v2_local-1"
+    log.mkdir()
+    events = {
+        2: [{
+            "Event": "SparkListenerJobStart", "Job ID": 0,
+            "Submission Time": 1000, "Stage Infos": [{"Stage ID": 0}],
+            "Properties": {"spark.job.description": "q"},
+        }],
+        5: [{
+            "Event": "SparkListenerTaskEnd", "Stage ID": 0,
+            "Task Metrics": {"Executor Run Time": 700, "JVM GC Time": 3},
+        }],
+        7: [{
+            "Event": "SparkListenerStageCompleted",
+            "Stage Info": {
+                "Stage ID": 0, "Stage Name": "collect at x.py:1",
+                "Number of Tasks": 4, "Completion Time": 3400,
+            },
+        }],
+        10: [{"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 3500}],
+    }
+    for i in range(1, 12):
+        name = f"events_{i}_local-1" + (".zstd" if i == 10 else "")
+        _write_part(str(log / name), events.get(i, [{"Event": "SparkListenerLogStart"}]))
+    monkeypatch.setattr("sys.argv", ["parse_eventlog.py", str(log)])
+    parse_eventlog.main()
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[-1] == "TOTAL job 2.500s gaps 0.000s n_jobs=1"
+    assert lines[0].startswith("job 0:   2.500s")
+    assert "collect[4t 700ms" in lines[0]

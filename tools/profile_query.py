@@ -12,12 +12,13 @@ the seconds of a pinned query actually go" without the UI.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import parse_eventlog  # noqa: E402
 
 EVDIR = "/tmp/spark-events"
 
@@ -54,7 +55,7 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         print(f"fixture warmup failed: {exc}", file=sys.stderr)
 
-    windows = {}
+    walls = {}
     for name in names:
         fn = qs[name]
         # warm run
@@ -68,7 +69,7 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         t1 = time.time()
         sc.setJobDescription(None)
-        windows[name] = (t0 * 1000, t1 * 1000, t1 - t0)
+        walls[name] = t1 - t0
         print(f"== {name}: measured wall {t1 - t0:.3f}s")
 
     app_id = spark.sparkContext.applicationId
@@ -77,101 +78,16 @@ def main() -> None:
     log_path = os.path.join(EVDIR, app_id)
     if not os.path.exists(log_path):
         # Spark 4 rolling layout: eventlog_v2_<appId>/events_*
-        d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
-        parts = sorted(
-            os.path.join(d, f) for f in os.listdir(d) if f.startswith("events_")
+        log_path = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
+    jobs, stages = parse_eventlog.parse(log_path)
+    for name, wall in walls.items():
+        print(f"\n==== {name}  wall={wall:.3f}s ====")
+        job_sum, gap_sum, n = parse_eventlog.print_jobs(
+            jobs, stages, keep=lambda desc, name=name: desc == f"PROFILE:{name}"
         )
-    else:
-        parts = [log_path]
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    import itertools
-
-    def _lines():
-        for p in parts:
-            with open(p) as fh:
-                yield from fh
-
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                props = ev.get("Properties") or {}
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": props.get("spark.job.description", ""),
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                    "callsite": ev.get("Stage Infos", [{}])[-1].get("Details", "")[:0],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                stages[sid] = {
-                    "name": si["Stage Name"],
-                    "tasks": si["Number of Tasks"],
-                    "submit": si.get("Submission Time"),
-                    "complete": si.get("Completion Time"),
-                }
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                m = ev.get("Task Metrics") or {}
-                st = stages.setdefault(sid, {})
-                st["run_ms"] = st.get("run_ms", 0) + m.get("Executor Run Time", 0)
-                st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
-                st["deser_ms"] = st.get("deser_ms", 0) + m.get(
-                    "Executor Deserialize Time", 0
-                )
-                srm = m.get("Shuffle Read Metrics") or {}
-                st["sh_read"] = st.get("sh_read", 0) + srm.get(
-                    "Remote Bytes Read", 0
-                ) + srm.get("Local Bytes Read", 0)
-                st["fetch_ms"] = st.get("fetch_ms", 0) + srm.get("Fetch Wait Time", 0)
-                swm = m.get("Shuffle Write Metrics") or {}
-                st["sh_write"] = st.get("sh_write", 0) + swm.get(
-                    "Shuffle Bytes Written", 0
-                )
-                pym = m.get("Python Eval Time")  # may not exist
-
-    for name, (w0, w1, wall) in windows.items():
-        sel = [
-            (jid, j)
-            for jid, j in jobs.items()
-            if j.get("desc") == f"PROFILE:{name}" and "end" in j
-        ]
-        sel.sort(key=lambda x: x[1]["start"])
-        print(f"\n==== {name}  wall={wall:.3f}s  jobs={len(sel)} ====")
-        prev_end = None
-        job_sum = 0.0
-        gap_sum = 0.0
-        for jid, j in sel:
-            dur = (j["end"] - j["start"]) / 1000.0
-            gap = (j["start"] - prev_end) / 1000.0 if prev_end else 0.0
-            prev_end = j["end"]
-            job_sum += dur
-            gap_sum += max(gap, 0)
-            sids = [s for s in j["stages"] if s in stages and stages[s].get("complete")]
-            stg = []
-            for s in sorted(sids):
-                st = stages[s]
-                nm = st.get("name", "?").split(" at ")[0]
-                stg.append(
-                    f"{nm}[{st.get('tasks', '?')}t "
-                    f"{st.get('run_ms', 0)}ms run {st.get('gc_ms', 0)}gc "
-                    f"{st.get('sh_read', 0) // 1024}KBr]"
-                )
-            print(
-                f"  job {jid}: {dur:6.3f}s gap_before={gap:6.3f}s "
-                f"stages={len(sids)}: {' | '.join(stg[:6])}"
-            )
         print(
-            f"  TOTAL job time {job_sum:.3f}s + inter-job gaps {gap_sum:.3f}s"
-            f" (wall {wall:.3f}s)"
+            f"TOTAL job time {job_sum:.3f}s + inter-job gaps {gap_sum:.3f}s"
+            f" over {n} jobs (wall {wall:.3f}s)"
         )
 
 
