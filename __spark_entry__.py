@@ -2986,9 +2986,9 @@ def ml_nb_scores(spark, sf_dir):
 
 # ml_louvain retired from the query surface (r7 verdict #9): ml_leiden
 # is the representative rows-only clustering row — it carries Leiden's
-# connected-communities guarantee, which Louvain lacks. The Louvain
-# driver itself stays (ml/cluster.py louvain_driver) with its seeded
-# unit test in tests/test_ml.py.
+# connected-communities guarantee, which Louvain lacks. There is no
+# Louvain kernel; ml.cluster.leiden_micros is the one modularity
+# clustering kernel.
 
 
 # SQL replay of the integer-exact Leiden (ml.cluster.leiden_micros) —
@@ -3167,9 +3167,7 @@ def ml_leiden(spark, sf_dir):
     pinned move order (ml.cluster.leiden_micros) make the whole trace
     an exact-integer state machine that _LEIDEN_ST_CTE replays
     verbatim (two one-row list-state recursions per level — see
-    _leiden_chain), exactly how clust_paris_cut was promoted in r10. The
-    float-argmax leiden_driver stays as the work-queue variant
-    (seeded unit tests, tests/test_ml.py)."""
+    _leiden_chain), exactly how clust_paris_cut was promoted in r10."""
     from scarf_spark.ml import cluster
 
     edges = _knn_edges(spark, sf_dir).select(

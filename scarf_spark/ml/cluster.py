@@ -8,14 +8,16 @@ Spark-first we provide:
     label propagation on the edge DataFrame: each round is one
     join+groupBy (mode of neighbor labels, ties → smallest label).
     Scales to billions of edges; this is the cluster-scale path.
-  * louvain_driver — networkx Louvain on the collected edge list
-    (driver_compute; the KNN graph is n·k rows — for 4M cells × k=11
-    that is 44M edges, the same envelope the reference accepts for
-    leidenalg), seeded for reproducibility.
-  * leiden_driver — from-scratch deterministic Leiden (local moving →
-    refinement → aggregation, Traag 2019) on the same collected edge
-    list; refinement restores the connected-communities guarantee the
-    reference gets from leidenalg and Louvain lacks.
+  * leiden_micros — deterministic Leiden (local moving → refinement →
+    aggregation, Traag 2019) on the collected edge list (driver_compute;
+    the KNN graph is n·k rows, the same envelope the reference accepts
+    for leidenalg). Integer micro-weights and a pinned move order make
+    it a full SQL value oracle; refinement keeps every community
+    internally connected.
+  * paris_dendrogram_micros — Paris average-linkage agglomeration over
+    the same collected graph, again on integer micro-weights, with the
+    straight (cut_dendrogram) and balanced (cut_dendrogram_balanced)
+    cuts.
   * kmeans_mllib — MLlib KMeans on embedding vectors (seeded), the
     distributed centroid path used for the initial embedding
     (``ann.py:328-346``).
@@ -88,172 +90,6 @@ def label_propagation(
     return labels
 
 
-def louvain_driver(edges: DataFrame, seed: int = 4466, weight_col: str | None = None) -> DataFrame:
-    """driver_compute: collect the (n·k)-row edge list, run seeded
-    networkx Louvain, return (node, cluster) with clusters renumbered
-    by smallest member for determinism. Mirrors the reference's
-    collect-to-leidenalg boundary (``graph_datastore.py:1379-1459``)."""
-    import networkx as nx
-
-    rows = edges.select("src", "dst", *([weight_col] if weight_col else [])).collect()
-    g = nx.Graph()
-    for r in rows:
-        wgt = r[weight_col] if weight_col else 1.0
-        g.add_edge(r["src"], r["dst"], weight=wgt)
-    comms = nx.community.louvain_communities(g, seed=seed)
-    comms = sorted((sorted(c) for c in comms), key=lambda c: c[0])
-    spark = edges.sparkSession
-    data = [(int(n), int(ci)) for ci, c in enumerate(comms) for n in c]
-    return spark.createDataFrame(data, ["node", "cluster"])
-
-
-def leiden_driver(
-    edges: DataFrame,
-    resolution: float = 1.0,
-    n_levels: int = 10,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """driver_compute: deterministic Leiden (Traag/Waltman/van Eck 2019,
-    "From Louvain to Leiden") over the collected n·k edge list — the
-    reference runs leidenalg on the same collected graph
-    (``scarf/datastore/graph_datastore.py:1379-1459``). Seedless
-    deterministic variant: nodes are processed in sorted order, moves
-    are greedy best-gain with smallest-community-id tie-breaks (no RNG
-    — the same discrete-argmax boundary that makes all Leiden-family
-    results non-oracle-able, SURVEY §8).
-
-    Full three-phase loop per level: (1) local moving (queue-based
-    greedy modularity, resolution-scaled), (2) REFINEMENT — each
-    community is re-partitioned from singletons by merging only along
-    internal edges, which restores Leiden's guarantee that every
-    returned community is internally connected (Louvain can emit
-    disconnected ones), (3) aggregation on the refined partition with
-    the moving partition as the aggregate's initial state. Levels
-    repeat until a fixed point. Clusters renumbered by smallest member.
-    Returns (node, cluster)."""
-    rows = edges.select(
-        "src", "dst", *([weight_col] if weight_col else [])
-    ).collect()
-    adj: dict[int, dict[int, float]] = {}
-    for r in rows:
-        a, b = int(r["src"]), int(r["dst"])
-        if a == b:
-            continue
-        wgt = float(r[weight_col]) if weight_col else 1.0
-        adj.setdefault(a, {})[b] = adj.get(a, {}).get(b, 0.0) + wgt
-        adj.setdefault(b, {})[a] = adj.get(b, {}).get(a, 0.0) + wgt
-
-    def _leiden(adj, self_w):
-        nodes = sorted(adj)
-        # strength includes aggregate self-loops (2× the collapsed
-        # internal weight) — without them higher levels under-weight
-        # dense super-nodes and over-merge
-        strength = {v: sum(adj[v].values()) + self_w.get(v, 0.0) for v in nodes}
-        two_m = sum(strength.values()) or 1.0
-        comm = {v: v for v in nodes}
-        c_tot = dict(strength)
-
-        def best_move(v):
-            cv, kv = comm[v], strength[v]
-            k_in: dict[int, float] = {}
-            for u, wuv in adj[v].items():
-                k_in[comm[u]] = k_in.get(comm[u], 0.0) + wuv
-            base_tot = c_tot[cv] - kv
-            best_c, best_g = cv, (
-                k_in.get(cv, 0.0) - resolution * kv * base_tot / two_m
-            )
-            for c, kc in sorted(k_in.items()):
-                if c == cv:
-                    continue
-                g = kc - resolution * kv * c_tot[c] / two_m
-                if g > best_g or (g == best_g and c < best_c):
-                    best_c, best_g = c, g
-            return best_c
-
-        # phase 1: queue-based local moving to a fixed point
-        from collections import deque
-
-        queue, queued = deque(nodes), set(nodes)
-        while queue:
-            v = queue.popleft()
-            queued.discard(v)
-            c_new = best_move(v)
-            if c_new != comm[v]:
-                c_tot[comm[v]] -= strength[v]
-                c_tot[c_new] += strength[v]
-                comm[v] = c_new
-                for u in adj[v]:
-                    if comm[u] != c_new and u not in queued:
-                        queue.append(u)
-                        queued.add(u)
-
-        # phase 2: refinement — re-partition each community from
-        # singletons, merging a singleton node only into an adjacent
-        # refined community INSIDE its community (positive gain,
-        # deterministic greedy) → refined communities are connected
-        ref = {v: v for v in nodes}
-        r_tot = dict(strength)
-        for v in nodes:
-            if ref[v] != v:
-                continue  # already merged somewhere
-            cv, kv = comm[v], strength[v]
-            k_in: dict[int, float] = {}
-            for u, wuv in adj[v].items():
-                if comm[u] == cv and ref[u] != ref[v]:
-                    k_in[ref[u]] = k_in.get(ref[u], 0.0) + wuv
-            best_r, best_g = ref[v], 0.0
-            for rc, kc in sorted(k_in.items()):
-                g = kc - resolution * kv * r_tot[rc] / two_m
-                if g > best_g or (g == best_g and g > 0 and rc < best_r):
-                    best_r, best_g = rc, g
-            if best_r != ref[v]:
-                r_tot[best_r] += kv
-                r_tot[ref[v]] -= kv
-                ref[v] = best_r
-        return comm, ref
-
-    # level loop: aggregate on the REFINED partition (self-loops keep
-    # the collapsed internal weight), next level re-moves from
-    # singletons; stops at the refinement fixed point, where the final
-    # moving partition is applied
-    labels = {v: v for v in adj}
-    self_w: dict[int, float] = {}
-    for _ in range(n_levels):
-        if not adj:
-            break
-        comm, ref = _leiden(adj, self_w)
-        if all(ref[v] == v for v in ref):
-            labels = {v: comm[labels[v]] for v in labels}
-            break
-        labels = {v: ref[labels[v]] for v in labels}
-        agg: dict[int, dict[int, float]] = {}
-        new_self: dict[int, float] = {}
-        for v, nbs in adj.items():
-            rv = ref[v]
-            new_self[rv] = new_self.get(rv, 0.0) + self_w.get(v, 0.0)
-            for u, wuv in nbs.items():
-                ru = ref[u]
-                if rv == ru:
-                    new_self[rv] = new_self.get(rv, 0.0) + wuv
-                else:
-                    agg.setdefault(rv, {})[ru] = (
-                        agg.get(rv, {}).get(ru, 0.0) + wuv
-                    )
-        for rv in new_self:
-            agg.setdefault(rv, {})
-        adj, self_w = agg, new_self
-    # renumber clusters by smallest member for determinism
-    groups: dict[int, list[int]] = {}
-    for v, c in labels.items():
-        groups.setdefault(c, []).append(v)
-    remap = {c: min(vs) for c, vs in groups.items()}
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        sorted((int(v), int(remap[c])) for v, c in labels.items()),
-        ["node", "cluster"],
-    )
-
-
 def leiden_micros(
     edges: DataFrame,
     sweeps: int = 2,
@@ -262,10 +98,9 @@ def leiden_micros(
 ) -> DataFrame:
     """driver_compute: INTEGER-EXACT deterministic Leiden — the same
     promotion playbook that took the Paris cuts from weak to full
-    oracle (paris_dendrogram_micros). Three differences from
-    :func:`leiden_driver` (the reference's leidenalg boundary,
-    ``graph_datastore.py:1379-1459``), each one removing an
-    engine-private degree of freedom:
+    oracle (paris_dendrogram_micros). Three differences from the
+    reference's leidenalg run (``graph_datastore.py:1379-1459``), each
+    one removing an engine-private degree of freedom:
 
     * edge weights are integer micros and every modularity-gain
       comparison is the exact integer ``k_in·2m − k_v·Σ_tot``
@@ -283,7 +118,7 @@ def leiden_micros(
     (a, b, weight_col) rows; direction and duplicates are normalized
     here. Returns (node, cluster), clusters renumbered by smallest
     member. Driver state is the n·k edge dict — the same
-    driver_compute boundary as leiden_driver."""
+    driver_compute boundary as the reference's collected graph."""
     rows = edges.collect()
     ew: dict[tuple[int, int], int] = {}
     for r in rows:
@@ -509,72 +344,9 @@ def kmeans_lloyd(
     return out
 
 
-def paris_like_dendrogram(edges: DataFrame, weight_col: str = "weight"):
-    """driver_compute: a Paris-style average-linkage agglomeration over
-    the collected weighted graph (``graph_datastore.py:1461-1584``;
-    BalancedCut lives in dendrogram cuts). Returns (merges, leaf_ids):
-    merges is a list of (child_a, child_b, dist, size) — the (n-1, 4)
-    dendrogram shape the reference stores — in a dense 0-based node
-    space; leaf_ids[i] is the original node id of dense leaf i.
-    Internal node mi gets id ``len(leaf_ids) + mi``."""
-    rows = edges.select("src", "dst", weight_col).collect()
-    nodes = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-    idx = {n: i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    sim: dict[tuple[int, int], float] = {}
-    for r in rows:
-        a, b = idx[r["src"]], idx[r["dst"]]
-        if a == b:
-            continue
-        key = (min(a, b), max(a, b))
-        sim[key] = sim.get(key, 0.0) + float(r[weight_col])
-    # lazy-invalidation heap (same argument as paris_dendrogram_micros:
-    # a pair's stored sim never changes after creation, so staleness ==
-    # a dead endpoint); the float average-linkage recursion
-    # sim(m,o) = sim(a,o)·|a|/|m| + sim(b,o)·|b|/|m| is preserved
-    # bit-for-bit — the two contributions commute, so per-pair values
-    # match the old full-scan loop exactly.
-    import heapq
-
-    size = [1] * n
-    alive = [True] * n
-    nbr: list[dict[int, float] | None] = [dict() for _ in range(n)]
-    heap: list[tuple[float, int, int]] = []
-    for (a, b), s0 in sim.items():
-        nbr[a][b] = s0
-        nbr[b][a] = s0
-        heapq.heappush(heap, (-s0, a, b))
-    merges = []
-    nxt = n
-    while heap:
-        # deterministic argmax: highest avg-linkage similarity, tie → ids
-        negs, a, b = heapq.heappop(heap)
-        if not (alive[a] and alive[b]):
-            continue
-        merges.append((a, b, 1.0 / (1.0 - negs), size[a] + size[b]))
-        alive[a] = alive[b] = False
-        new_size = size[a] + size[b]
-        size.append(new_size)
-        alive.append(True)
-        # merge similarity lists (average linkage over member pairs)
-        acc: dict[int, float] = {}
-        for src in (a, b):
-            frac = size[src] / new_size
-            for other, v in nbr[src].items():  # type: ignore[union-attr]
-                if other != a and other != b and alive[other]:
-                    acc[other] = acc.get(other, 0.0) + v * frac
-            nbr[src] = None
-        nbr.append(acc)
-        for other, v in acc.items():
-            nbr[other][nxt] = v  # type: ignore[index]
-            heapq.heappush(heap, (-v, other, nxt))
-        nxt += 1
-    return merges, nodes
-
-
 def paris_dendrogram_micros(edges: DataFrame, weight_col: str = "w_micros"):
-    """driver_compute: the ORACLE-EXACT variant of
-    :func:`paris_like_dendrogram` — integer micro-weights instead of
+    """driver_compute: a Paris-style average-linkage agglomeration over
+    the collected weighted graph, on integer micro-weights instead of
     accumulated floats, which makes the whole agglomeration replayable
     by any engine:
 
@@ -588,8 +360,11 @@ def paris_dendrogram_micros(edges: DataFrame, weight_col: str = "w_micros"):
     merge sequence is a deterministic function of the integer edge
     table, which is what lets clust_paris_cut carry a full SQL oracle
     (a recursive CTE replaying the merges) instead of a rows-only
-    check. Same (merges, leaf_ids) contract as paris_like_dendrogram;
-    recorded dist = 1/(1+W/(sa·sb)).
+    check. Returns (merges, leaf_ids): merges is a list of
+    (child_a, child_b, dist, size) — the (n-1, 4) dendrogram shape the
+    reference stores — in a dense 0-based node space, with recorded
+    dist = 1/(1+W/(sa·sb)); leaf_ids[i] is the original node id of
+    dense leaf i, and internal node mi gets id ``len(leaf_ids) + mi``.
 
     Ref: ``graph_datastore.py:1461-1584`` (dendrogram build),
     ``dendrogram.py:106-239`` (cuts consume only the merge order)."""
@@ -654,7 +429,7 @@ def cut_dendrogram(merges, leaf_ids, n_clusters: int) -> dict[int, int]:
     ``graph_datastore.py:1519-1538``): undo the last (n_clusters-1)
     merges and label leaves by their component (components renumbered
     by smallest member). ``leaf_ids`` is the list returned by
-    :func:`paris_like_dendrogram`; keys of the result are the original
+    :func:`paris_dendrogram_micros`; keys of the result are the original
     node ids."""
     n_leaves = len(leaf_ids)
     parent = {}

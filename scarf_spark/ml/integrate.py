@@ -13,11 +13,8 @@
   batch) offset subtraction; deterministic seeding. The reference
   ports harmonypy (single-node); here every pass is a DataFrame agg
   so it scales with executors, with only k×d centroids on the driver.
-* harmony_converge — the reference's FULL algorithm envelope:
-  objective-driven windowed convergence, diversity cross-entropy
-  penalty, and the moe ridge correction, distributed with one
-  aggregate per inner iteration; bit-parity against the deterministic
-  numpy twin ``_harmony_numpy`` is unit-tested.
+  It runs a fixed number of rounds; the reference's objective-driven
+  convergence and ridge correction are not ported.
 """
 
 from __future__ import annotations
@@ -363,359 +360,4 @@ def harmony_lite(
         # application lifetime (the bench stream calls this repeatedly)
         out = out.localCheckpoint()
         prev_base.unpersist()
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Harmony, reference envelope: objective-driven convergence + ridge
-# ---------------------------------------------------------------------------
-
-
-def _harmony_numpy(
-    Z,
-    batches,
-    n_clusters,
-    sigma=0.1,
-    theta=1.0,
-    lamb=1.0,
-    max_iter_harmony=10,
-    max_iter_kmeans=20,
-    epsilon_kmeans=1e-5,
-    epsilon_harmony=1e-4,
-    window_size=3,
-):
-    """Driver-side deterministic twin of the reference Harmony
-    (``scarf/harmony.py:92-322``): same Z_cos scaling, soft-kmeans
-    objective (distance + sigma-weighted entropy + theta cross-entropy),
-    windowed kmeans convergence, harmony epsilon, and moe ridge
-    correction.  Two documented divergences from harmonypy, both for
-    determinism: centroids seed from the first K cells (not seeded
-    sklearn KMeans) and R updates full-batch synchronously (not
-    shuffled blocks — ``harmony.py:261-266`` np.random.shuffle).
-
-    Z: (d, N) array; batches: length-N int array in [0, B).
-    Returns (Z_corr, n_harmony_iters)."""
-    import numpy as np
-
-    d, N = Z.shape
-    K = n_clusters
-    uniq = sorted(set(int(b) for b in batches))
-    B = len(uniq)
-    Phi = np.zeros((B, N))
-    for j, b in enumerate(batches):
-        Phi[uniq.index(int(b)), j] = 1.0
-    Pr_b = Phi.sum(axis=1) / N
-    sig = np.repeat(float(sigma), K)
-    th = np.repeat(float(theta), B)
-    lamb_mat = np.diag(np.insert(np.repeat(float(lamb), B), 0, 0.0))
-    Phi_moe = np.vstack((np.ones(N), Phi))
-
-    Z_orig = Z.copy()
-    Z_corr = Z.copy()
-
-    def cosify(M):
-        C = M / M.max(axis=0)
-        return C / np.linalg.norm(C, ord=2, axis=0)
-
-    Z_cos = cosify(Z_corr)
-    Y = Z_cos[:, :K].copy()
-    Y = Y / np.linalg.norm(Y, ord=2, axis=0)
-
-    def compute_R(dist_mat, E, O):
-        R = -dist_mat / sig[:, None]
-        R -= np.max(R, axis=0)
-        R = np.exp(R)
-        R *= np.dot(np.power((E + 1) / (O + 1), th), Phi)
-        return R / R.sum(axis=0)
-
-    dist_mat = 2 * (1 - Y.T @ Z_cos)
-    R = -dist_mat / sig[:, None]
-    R -= np.max(R, axis=0)
-    R = np.exp(R)
-    R = R / R.sum(axis=0)
-    E = np.outer(R.sum(axis=1), Pr_b)
-    O = R @ Phi.T
-
-    def objective(R, dist_mat, E, O):
-        kerr = float(np.sum(R * dist_mat))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ent = R * np.log(R)
-        ent[~np.isfinite(ent)] = 0.0
-        entropy = float(np.sum(ent * sig[:, None]))
-        cross = float(
-            np.sum(O * sig[:, None] * th[None, :] * np.log((O + 1) / (E + 1)))
-        )
-        return kerr + entropy + cross
-
-    obj_kmeans = [objective(R, dist_mat, E, O)]
-    obj_harmony = [obj_kmeans[-1]]
-    n_outer = 0
-    for outer in range(max_iter_harmony):
-        n_outer += 1
-        # ---- cluster() ----
-        dist_mat = 2 * (1 - Y.T @ Z_cos)
-        for it in range(max_iter_kmeans):
-            Y = Z_cos @ R.T
-            Y = Y / np.linalg.norm(Y, ord=2, axis=0)
-            dist_mat = 2 * (1 - Y.T @ Z_cos)
-            R = compute_R(dist_mat, E, O)
-            E = np.outer(R.sum(axis=1), Pr_b)
-            O = R @ Phi.T
-            obj_kmeans.append(objective(R, dist_mat, E, O))
-            if it > window_size:
-                old = sum(obj_kmeans[-2 - i] for i in range(window_size))
-                new = sum(obj_kmeans[-1 - i] for i in range(window_size))
-                if abs(old - new) / abs(old) < epsilon_kmeans:
-                    break
-        obj_harmony.append(obj_kmeans[-1])
-        # ---- moe_correct_ridge ----
-        Z_corr = Z_orig.copy()
-        for i in range(K):
-            Phi_Rk = Phi_moe * R[i, :]
-            x = Phi_Rk @ Phi_moe.T + lamb_mat
-            W = np.linalg.inv(x) @ (Phi_Rk @ Z_orig.T)
-            W[0, :] = 0
-            Z_corr -= W.T @ Phi_Rk
-        Z_cos = cosify(Z_corr)
-        # ---- harmony convergence ----
-        e = (obj_harmony[-2] - obj_harmony[-1]) / abs(obj_harmony[-2])
-        if e < epsilon_harmony:
-            break
-    return Z_corr, n_outer
-
-
-def harmony_converge(
-    cells_vec: DataFrame,
-    batch_df: DataFrame,
-    n_clusters: int = 4,
-    sigma: float = 0.1,
-    theta: float = 1.0,
-    lamb: float = 1.0,
-    max_iter_harmony: int = 10,
-    max_iter_kmeans: int = 20,
-    epsilon_kmeans: float = 1e-5,
-    epsilon_harmony: float = 1e-4,
-    window_size: int = 3,
-) -> DataFrame:
-    """Distributed Harmony with the reference's FULL algorithm envelope
-    (``scarf/harmony.py:92-322``): diversity-penalized soft-kmeans run
-    to windowed objective convergence inside each harmony iteration,
-    mixture-of-experts ridge correction (``harmony.py:310-322``
-    moe_correct_ridge), and the harmony epsilon stopping rule —
-    vs :func:`harmony_lite`'s fixed-2-iteration first-order analog.
-
-    Execution shape: cells stay distributed; every per-cell quantity
-    (Z_cos, soft assignments R, corrections) is a column expression
-    parameterized by K×d / K×B / (B+1)×d DRIVER matrices collected
-    from one aggregate per inner iteration — the same driver_compute
-    boundary the reference draws (its whole state is in-memory numpy).
-    R itself is never materialized as rows: it is re-derived from the
-    (Y, E, O) literals that defined it, so each pass is one shuffle.
-    Per outer iteration the corrected coordinates are
-    localCheckpoint()ed, keeping expression depth and lineage constant.
-    Parity with :func:`_harmony_numpy` (same deterministic spec) is
-    the test contract.
-
-    cells_vec: (cell_id, v array<double>); batch_df: (cell_id, batch).
-    Returns corrected (cell_id, v) = Z_corr."""
-    import numpy as np
-
-    d = cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
-    K = n_clusters
-    base = (
-        cells_vec.join(batch_df, "cell_id")
-        .select("cell_id", "v", "batch")
-        .persist()
-    )
-    uniq = sorted(
-        r["batch"] for r in base.select("batch").distinct().collect()
-    )
-    B = len(uniq)
-    N = base.count()
-    nb = {
-        r["batch"]: r["n"]
-        for r in base.groupBy("batch").agg(F.count("*").alias("n")).collect()
-    }
-    Pr_b = np.array([nb[b] / N for b in uniq])
-    sig = np.repeat(float(sigma), K)
-    th = np.repeat(float(theta), B)
-    lamb_mat = np.diag(np.insert(np.repeat(float(lamb), B), 0, 0.0))
-
-    def _per_batch(mapping: dict, default: float = 0.0):
-        expr = None
-        for b, val in mapping.items():
-            w = F.when(F.col("batch") == b, float(val))
-            expr = w if expr is None else expr.when(F.col("batch") == b, float(val))
-        return F.coalesce(expr, F.lit(default))
-
-    def _cos_exprs(cols):
-        """Z_cos per cell: scale by the cell's max coord, then L2
-        normalize (``harmony.py:113-114``)."""
-        mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
-        scaled = [c / mx for c in cols]
-        nrm = F.sqrt(sum(s * s for s in scaled))
-        return [s / nrm for s in scaled]
-
-    def _r_exprs(zc, r_def):
-        """Soft-assignment expressions for R as defined by r_def:
-        ("init", Y) = penalty-free init_cluster form, or
-        ("full", Y, E, O) = diversity-penalized update_R form."""
-        Y = r_def[1]  # K × d
-        dist = [
-            2.0 * (1.0 - sum(float(Y[c, i]) * zc[i] for i in range(d)))
-            for c in range(K)
-        ]
-        logits = [-dc / float(sig[c]) for c, dc in enumerate(dist)]
-        mxl = F.greatest(*logits) if K > 1 else logits[0]
-        raw = [F.exp(lg - mxl) for lg in logits]
-        if r_def[0] == "full":
-            _, _, E, O = r_def
-            pen = [
-                _per_batch(
-                    {
-                        uniq[bi]: float(((E[c, bi] + 1) / (O[c, bi] + 1)) ** th[bi])
-                        for bi in range(B)
-                    },
-                    1.0,
-                )
-                for c in range(K)
-            ]
-            raw = [r * p for r, p in zip(raw, pen)]
-        den = sum(raw)
-        return [n / den for n in raw], dist
-
-    # ---- init (mirrors init_cluster, deterministic first-K seeding) ----
-    df = base.select(
-        "cell_id", "batch", *[F.col("v")[i].alias(f"z{i}") for i in range(d)]
-    ).localCheckpoint(eager=True)
-    zcols = [F.col(f"z{i}") for i in range(d)]  # current corrected coords
-    zc = _cos_exprs(zcols)
-
-    seed_df = (
-        df.orderBy("cell_id")
-        .limit(K)
-        .select(*[z.alias(f"c{i}") for i, z in enumerate(zc)])
-    )
-    Y = np.array([[r[f"c{i}"] for i in range(d)] for r in seed_df.collect()])
-    Y = (Y.T / np.linalg.norm(Y.T, ord=2, axis=0)).T  # K × d, unit rows
-
-    def _stats(r_exprs, dist_exprs):
-        """One groupBy(batch) action → O (K×B), kmeans_error, entropy;
-        E and the cross-entropy term derive driver-side (cross =
-        Σ O·σ·θ·log((O+1)/(E+1)) because Φ is one-hot)."""
-        aggs = [F.sum(r_exprs[c]).alias(f"o{c}") for c in range(K)]
-        aggs.append(
-            F.sum(sum(r * dc for r, dc in zip(r_exprs, dist_exprs))).alias("kerr")
-        )
-        ent = sum(
-            F.when(r > 0, r * F.log(r) * float(sig[c])).otherwise(0.0)
-            for c, r in enumerate(r_exprs)
-        )
-        aggs.append(F.sum(ent).alias("ent"))
-        rows = df.groupBy("batch").agg(*aggs).collect()
-        O = np.zeros((K, B))
-        kerr = ent_v = 0.0
-        for r in rows:
-            bi = uniq.index(r["batch"])
-            for c in range(K):
-                O[c, bi] = r[f"o{c}"]
-            kerr += r["kerr"]
-            ent_v += r["ent"]
-        E = np.outer(O.sum(axis=1), Pr_b)
-        cross = float(
-            np.sum(O * sig[:, None] * th[None, :] * np.log((O + 1) / (E + 1)))
-        )
-        return O, E, kerr + ent_v + cross
-
-    r_def = ("init", Y)
-    r_cur, dist_cur = _r_exprs(zc, r_def)
-    O, E, obj0 = _stats(r_cur, dist_cur)
-    obj_kmeans = [obj0]
-    obj_harmony = [obj0]
-
-    for _outer in range(max_iter_harmony):
-        # ---- cluster(): inner soft-kmeans to windowed convergence ----
-        for it in range(max_iter_kmeans):
-            y_aggs = [
-                F.sum(r_cur[c] * zc[i]).alias(f"y{c}_{i}")
-                for c in range(K)
-                for i in range(d)
-            ]
-            row = df.agg(*y_aggs).collect()[0]
-            Y = np.array([[row[f"y{c}_{i}"] for i in range(d)] for c in range(K)])
-            Y = (Y.T / np.linalg.norm(Y.T, ord=2, axis=0)).T
-            r_def = ("full", Y, E, O)
-            r_cur, dist_cur = _r_exprs(zc, r_def)
-            O, E, obj = _stats(r_cur, dist_cur)
-            obj_kmeans.append(obj)
-            if it > window_size:
-                old = sum(obj_kmeans[-2 - i] for i in range(window_size))
-                new = sum(obj_kmeans[-1 - i] for i in range(window_size))
-                if abs(old - new) / abs(old) < epsilon_kmeans:
-                    break
-        obj_harmony.append(obj_kmeans[-1])
-        # ---- moe_correct_ridge (Z_corr rebuilt from Z_ORIG cols) ----
-        m_aggs = []
-        for c in range(K):
-            m_aggs.append(F.sum(r_cur[c]).alias(f"m{c}"))
-            for i in range(d):
-                m_aggs.append(
-                    F.sum(r_cur[c] * F.col(f"z{i}")).alias(f"s{c}_{i}")
-                )
-        rows = df.groupBy("batch").agg(*m_aggs).collect()
-        mass = np.zeros((K, B))
-        rhs_b = np.zeros((K, B, d))
-        for r in rows:
-            bi = uniq.index(r["batch"])
-            for c in range(K):
-                mass[c, bi] = r[f"m{c}"]
-                for i in range(d):
-                    rhs_b[c, bi, i] = r[f"s{c}_{i}"]
-        W_rows = {}
-        for c in range(K):
-            # x = Phi_Rk @ Phi_moe.T + lamb: closed form via one-hot Φ
-            x = np.zeros((B + 1, B + 1))
-            x[0, 0] = mass[c].sum()
-            for bi in range(B):
-                x[0, bi + 1] = x[bi + 1, 0] = x[bi + 1, bi + 1] = mass[c, bi]
-            x += lamb_mat
-            rhs = np.zeros((B + 1, d))
-            rhs[0] = rhs_b[c].sum(axis=0)
-            rhs[1:] = rhs_b[c]
-            W = np.linalg.inv(x) @ rhs
-            W[0, :] = 0  # keep the intercept (harmony.py:318)
-            for bi in range(B):
-                W_rows[(c, uniq[bi])] = W[bi + 1]
-        corr_exprs = []
-        for i in range(d):
-            adj = F.lit(0.0)
-            for c in range(K):
-                adj = adj + r_cur[c] * _per_batch(
-                    {b: W_rows[(c, b)][i] for b in uniq}, 0.0
-                )
-            corr_exprs.append((F.col(f"z{i}") - adj).alias(f"zc{i}"))
-        # materialize: original coords kept for the next ridge pass,
-        # PRE-correction coords kept so the unchanged R (the reference
-        # carries R across the correction) can be re-derived exactly
-        df = df.select(
-            "cell_id",
-            "batch",
-            *[F.col(f"z{i}") for i in range(d)],
-            *[zcols[i].alias(f"zp{i}") for i in range(d)],
-            *corr_exprs,
-        ).localCheckpoint(eager=True)
-        zcols = [F.col(f"zc{i}") for i in range(d)]
-        zc = _cos_exprs(zcols)
-        # same R values, now expressed over the stored zp columns
-        r_cur, _ = _r_exprs(_cos_exprs([F.col(f"zp{i}") for i in range(d)]), r_def)
-        # ---- harmony convergence ----
-        e = (obj_harmony[-2] - obj_harmony[-1]) / abs(obj_harmony[-2])
-        if e < epsilon_harmony:
-            break
-
-    out = df.select(
-        "cell_id",
-        F.array(*[F.col(f"zc{i}") for i in range(d)]).alias("v"),
-    )
-    base.unpersist()
     return out

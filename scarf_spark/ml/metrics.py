@@ -161,8 +161,8 @@ def lisi(edges: DataFrame, labels: DataFrame, perplexity: float = 5.0) -> DataFr
 def silhouette_squared(vec: DataFrame, dim: int, id_col: str = "vec_id",
                        vec_col: str = "v", label_col: str = "label") -> DataFrame:
     """Silhouette on *squared* euclidean distances via cluster
-    sufficient statistics — the O(n·C) scale path (the O(n²) pairwise
-    variant is :func:`silhouette_exact`).
+    sufficient statistics — the O(n·C) scale path, with no O(n²)
+    pairwise join.
 
     Mean squared distance from point i to cluster c decomposes as
       Σ_j ||x_i − x_j||² = Q_c + n_c·||x_i||² − 2·x_i·S_c
@@ -210,59 +210,6 @@ def silhouette_squared(vec: DataFrame, dim: int, id_col: str = "vec_id",
         (F.col("b") - F.col("a")) / F.greatest("a", "b")
     )
     return per.select(F.col("pid").alias(id_col), F.round(s, 6).alias("silhouette"))
-
-
-def silhouette_exact(vec: DataFrame, id_col: str = "vec_id", vec_col: str = "v",
-                     label_col: str = "label") -> DataFrame:
-    """Exact euclidean silhouette per point (the distance-ratio half of
-    the reference's graph silhouette, ``scarf/metrics.py:153-433``,
-    computed exactly instead of over sampled neighborhoods):
-    s(i) = (b − a) / max(a, b) with a = mean intra-cluster distance,
-    b = min over other clusters of the mean distance.
-
-    One pairwise self-join (O(n²) — the correctness baseline; at
-    production scale sample per cluster first, the reference samples
-    too), distances rounded to 6 before averaging so the result is
-    bit-stable across engines. Singleton clusters get s = 0 by the
-    sklearn convention."""
-    pts = vec.select(
-        F.col(id_col).alias("pid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("pv"),
-        F.col(label_col).alias("plab"),
-    )
-    other = pts.select(
-        F.col("pid").alias("qid"), F.col("pv").alias("qv"), F.col("plab").alias("qlab")
-    )
-    dist = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("pv"), F.col("qv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        6,
-    )
-    pairs = (
-        pts.join(other, F.col("pid") != F.col("qid"))
-        .select("pid", "plab", "qlab", dist.alias("d"))
-        .groupBy("pid", "plab", "qlab")
-        .agg(F.sum("d").alias("sd"), F.count("*").alias("nd"))
-    )
-    per = pairs.groupBy("pid", "plab").agg(
-        F.max(F.when(F.col("plab") == F.col("qlab"), F.col("sd"))).alias("intra_sd"),
-        F.max(F.when(F.col("plab") == F.col("qlab"), F.col("nd"))).alias("intra_n"),
-        F.min(
-            F.when(F.col("plab") != F.col("qlab"), F.col("sd") / F.col("nd"))
-        ).alias("b"),
-    )
-    a = F.col("intra_sd") / F.col("intra_n")
-    s = F.when(
-        F.col("intra_n").isNull(), F.lit(0.0)  # singleton cluster
-    ).otherwise((F.col("b") - a) / F.greatest(F.col("b"), a))
-    return per.select(
-        F.col("pid").alias(id_col), F.round(s, 6).alias("silhouette")
-    )
 
 
 def auc(

@@ -78,34 +78,18 @@ def word_shingles(
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature per (doc, seed): numeric min of the first 60
-    bits of md5(seed || '_' || shingle) — engine-exact (both sides
-    parse the same 15 hex chars to a BIGINT) and, unlike a min over
-    hex STRINGS, aggregates in primitive long state: at 20M shingles
-    the string-state hash agg measured ~4x slower (tools/scale_smoke).
-    (doc_id, seed, mh).
-
-    Long-form view over :func:`minhash_signatures_wide` (kept for API
-    compatibility; the wide form is the execution shape)."""
-    wide = minhash_signatures_wide(shingles, n_hashes, id_col)
-    pairs = F.array(*[
-        F.struct(F.lit(s).alias("seed"), F.col(f"mh{s}").alias("mh"))
-        for s in range(n_hashes)
-    ])
-    return wide.select(id_col, F.explode(pairs).alias("_e")).select(
-        id_col, F.col("_e.seed").alias("seed"), F.col("_e.mh").alias("mh")
-    )
-
-
 def minhash_signatures_wide(
     shingles: DataFrame, n_hashes: int = 8, id_col: str = "doc_id"
 ) -> DataFrame:
     """All n_hashes minhashes in ONE hash aggregation: per-seed MIN
     expressions computed map-side (partial agg) — no seeds cross join,
-    no n_hashes× row blowup through the shuffle. (doc_id, mh0..mhN)."""
+    no n_hashes× row blowup through the shuffle. (doc_id, mh0..mhN).
+
+    Minhash ``mh{s}`` is the numeric min of the first 60 bits of
+    md5(seed || '_' || shingle) — engine-exact (both sides parse the
+    same 15 hex chars to a BIGINT) and, unlike a min over hex STRINGS,
+    aggregated in primitive long state: at 20M shingles the
+    string-state hash agg measured ~4x slower (tools/scale_smoke)."""
     aggs = [
         F.min(
             F.conv(

@@ -341,42 +341,6 @@ def cosine_knn_exact_hof(
     )
 
 
-def lsh_signatures(
-    emb: DataFrame,
-    table: int = 0,
-    n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Random-hyperplane signature for one LSH table: plane (t, h)
-    component i = md5-hash01('p_t_h_i') - 0.5; sig = concatenated sign
-    bits. Deterministic and engine-portable.
-
-    The plane components are CONSTANTS, so they are evaluated
-    driver-side with hashlib and embedded as literals — bit-identical
-    to the SQL oracle's ``('0x'||substr(md5(...),1,15))::BIGINT /
-    2^60 - 0.5`` (same integer, same IEEE ops), but without shipping
-    n_planes×dim md5 expression nodes into the Catalyst plan (plan
-    compile time and per-row work both drop)."""
-    import hashlib
-
-    e = _as_double_vec(emb, id_col, vec_col)
-    bits = []
-    for h in range(n_planes):
-        comps = F.array(*[
-            F.lit(
-                int(hashlib.md5(f"p_{table}_{h}_{i}".encode()).hexdigest()[:15], 16)
-                / float(1 << 60)
-                - 0.5
-            )
-            for i in range(dim)
-        ])
-        dot = _dot(F.col("v"), comps)
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return e.select("vid", F.concat(*bits).alias("sig"), "v", "nrm")
-
-
 def lsh_signatures_all(
     emb: DataFrame,
     n_tables: int = 4,
@@ -385,11 +349,17 @@ def lsh_signatures_all(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """All tables' signatures in ONE pass: the (n_tables·n_planes)×dim
-    plane matrix is a constant (md5-derived, see
-    :func:`lsh_signatures`), so every signature is one BLAS matmul per
-    Arrow batch — (vid, t, sig) long form, no per-plane expression
-    trees, one scan of the input."""
+    """Random-hyperplane signatures for all LSH tables in ONE pass:
+    plane (t, h) component i = md5-hash01('p_t_h_i') - 0.5, and the
+    table-t signature is the concatenated sign bits of its n_planes
+    dot products. Deterministic and engine-portable: the components
+    are computed driver-side with hashlib, bit-identical to the SQL
+    oracle's ``('0x'||substr(md5(...),1,15))::BIGINT / 2^60 - 0.5``
+    (same integer, same IEEE ops).
+
+    The (n_tables·n_planes)×dim plane matrix is a constant, so every
+    signature is one BLAS matmul per Arrow batch — (vid, t, sig) long
+    form, no per-plane expression trees, one scan of the input."""
     import hashlib
 
     import numpy as np

@@ -9,41 +9,14 @@ the partials per key. Both phases are hash aggs; the hot key's work is
 now bounded by 1/n_salts per task.
 
 Algebraic aggregates (sum/count/min/max) don't need this — Spark's
-partial aggregation already combines map-side. Use these helpers for
-the holistic ones.
+partial aggregation already combines map-side. ``salted_count_distinct``
+(the ``agg_salted_distinct`` query) is the holistic case shipped here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_collect_list(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    n_salts: int = 16,
-    out: str = "values",
-    sort: bool = True,
-) -> DataFrame:
-    """collect_list per key without a single-task hot spot: phase 1
-    collects per (key, salt) — bounded lists — phase 2 flattens the
-    ≤ n_salts partial lists per key. ``sort=True`` sorts the final
-    array for deterministic output (salting randomizes arrival
-    order)."""
-    salt = F.pmod(F.xxhash64(F.col(value_col)), F.lit(n_salts)).alias("_salt")
-    p1 = (
-        df.select(*key_cols, F.col(value_col), salt)
-        .groupBy(*key_cols, "_salt")
-        .agg(F.collect_list(value_col).alias("_part"))
-    )
-    merged = p1.groupBy(*key_cols).agg(
-        F.flatten(F.collect_list("_part")).alias(out)
-    )
-    if sort:
-        merged = merged.withColumn(out, F.sort_array(F.col(out)))
-    return merged
 
 
 def salted_count_distinct(

@@ -187,54 +187,3 @@ def to_h5ad(
             },
         )
     return path
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_mb: int = 128,
-    out_path: str | None = None,
-) -> str:
-    """Small-files compaction: rewrite a parquet directory into files
-    near ``target_mb`` each — the maintenance pass every long-running
-    ingest needs (streaming `foreachBatch` and per-trigger appends
-    leave thousands of KB-sized files whose open/footer cost dominates
-    scans at warehouse scale).
-
-    File count = ceil(on-disk bytes / target): computed from the
-    FileSystem listing (no data read), then one `repartition(n)` write.
-    Parquet compression makes the mapping approximate — close enough
-    for the open-cost problem, which is about order of magnitude, not
-    exact sizes. In-place compaction writes to `<path>__compact` then
-    atomically points the caller at it; a real lakehouse would do this
-    under a table format's transaction log instead."""
-    import math
-
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    summary = fs.getContentSummary(p)
-    total_bytes = summary.getLength()
-    n_files = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-    dst = out_path or (path.rstrip("/") + "__compact")
-    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(dst)
-    return dst
-
-
-def write_partitioned(
-    df: DataFrame, out_dir: str, partition_cols: list[str]
-) -> str:
-    """Hive-partitioned parquet layout — the table organization that
-    makes partition PRUNING (not just row-group skipping) work at
-    100 TB: a reader's filter on a partition column eliminates whole
-    directories before any file is opened, visible in the scan plan as
-    PartitionFilters. Pair with Z-order keys (``sort_zorder``) inside
-    each partition for two-level skipping.
-
-    One shuffle-free write when the partition column correlates with
-    input order; otherwise Spark's dynamic partition insert handles
-    fan-out. Returns the output directory."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
-    return out_dir

@@ -228,19 +228,30 @@ class ScarfDataStore:
     # ---- downstream (graph_datastore.py:1218-1584) -------------------
 
     def run_clustering(self, n_clusters: int = 4, balanced_cut: bool = False, max_size: int | None = None) -> "ScarfDataStore":
-        """Paris-like dendrogram + straight/balanced cut
+        """Paris dendrogram + straight/balanced cut
         (``graph_datastore.py:1461-1584``); labels land as
-        ``{assay}_cluster``."""
+        ``{assay}_cluster``.
+
+        The dendrogram runs on integer micro-weights: the KNN graph's
+        weights are already ROUND(6), so ``round(weight·1e6)`` loses
+        nothing. ``balanced_cut`` needs ``max_size``."""
         from scarf_spark.ml.cluster import (
             cut_dendrogram,
             cut_dendrogram_balanced,
-            paris_like_dendrogram,
+            paris_dendrogram_micros,
         )
 
-        edges = self._require_graph()
-        merges, leaves = paris_like_dendrogram(edges)
+        if balanced_cut and (max_size or 0) < 1:
+            raise ValueError(
+                "run_clustering: balanced_cut=True needs a positive max_size "
+                f"(got {max_size!r}); without one every cell is split to its own cluster"
+            )
+        edges = self._require_graph().select(
+            "src", "dst", F.round(F.col("weight") * 1e6).cast("long").alias("w_micros")
+        )
+        merges, leaves = paris_dendrogram_micros(edges)
         labels = (
-            cut_dendrogram_balanced(merges, leaves, max_size=max_size or 0)
+            cut_dendrogram_balanced(merges, leaves, max_size=max_size)
             if balanced_cut
             else cut_dendrogram(merges, leaves, n_clusters)
         )

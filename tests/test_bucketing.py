@@ -2,7 +2,6 @@
 cell_id-bucketed counts table must aggregate by cell_id WITHOUT a
 shuffle — the co-located-join story for the 100 TB fact table."""
 
-import os
 import shutil
 
 import pytest
@@ -86,20 +85,3 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path_factory):
     read_files = [r[0] for r in back.select(F.input_file_name()).distinct().collect()]
     assert read_files and all("event_type=click" in f for f in read_files)
     shutil.rmtree(out, ignore_errors=True)
-
-
-def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path_factory):
-    from scarf_spark.sources.sinks import compact_parquet
-
-    src = str(tmp_path_factory.mktemp("frag"))
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # simulate a fragmented ingest: 64 tiny files
-    ev.repartition(64).write.mode("overwrite").parquet(src)
-    n_before = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-    assert n_before >= 32
-    dst = compact_parquet(spark, src, target_mb=128)
-    n_after = len([f for f in os.listdir(dst) if f.endswith(".parquet")])
-    assert n_after < n_before
-    assert spark.read.parquet(dst).count() == ev.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)

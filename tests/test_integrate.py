@@ -81,7 +81,7 @@ def test_silhouette_separated_blobs(spark):
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "v", "label"])
-    out = metrics.silhouette_exact(df)
+    out = metrics.silhouette_squared(df, dim=4)
     vals = [r["silhouette"] for r in out.collect()]
     assert min(vals) > 0.8  # well-separated blobs -> near-1 silhouette
 

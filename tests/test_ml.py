@@ -87,13 +87,6 @@ def test_label_prop_coarsens(edges):
     assert n_clusters < n_nodes / 2
 
 
-def test_louvain_deterministic(edges):
-    a = cluster.louvain_driver(edges, seed=4466).toPandas().sort_values("node")
-    b = cluster.louvain_driver(edges, seed=4466).toPandas().sort_values("node")
-    assert (a["cluster"].to_numpy() == b["cluster"].to_numpy()).all()
-    assert a["cluster"].nunique() >= 2
-
-
 def test_pseudotime_range_and_source(edges):
     pt = pseudotime.pba_pseudotime(
         edges.withColumn("weight", 1.0 / (1.0 + F.col("distance"))), source_node=0
@@ -193,8 +186,10 @@ def test_hvg_top_n(spark, sf_dir):
 
 
 def test_dendrogram_cut(edges):
-    lim = edges.limit(200).withColumn("weight", 1.0 / (1.0 + F.col("distance")))
-    merges, leaf_ids = cluster.paris_like_dendrogram(lim)
+    lim = edges.limit(200).withColumn(
+        "w_micros", F.floor(F.lit(1e6) / (1.0 + F.col("distance"))).cast("long")
+    )
+    merges, leaf_ids = cluster.paris_dendrogram_micros(lim)
     labels = cluster.cut_dendrogram(merges, leaf_ids, n_clusters=4)
     assert set(labels) == {int(r["src"]) for r in lim.collect()} | {
         int(r["dst"]) for r in lim.collect()
@@ -250,8 +245,14 @@ def test_centroid_classify_separable(spark):
     assert sum(r["n"] for r in out) == 60
 
 
+def _unit_micros(spark, edges):
+    return spark.createDataFrame(
+        [(a, b, 1_000_000) for a, b in edges], "a long, b long, w_micros long"
+    )
+
+
 def test_leiden_recovers_cliques(spark):
-    from scarf_spark.ml.cluster import leiden_driver
+    from scarf_spark.ml.cluster import leiden_micros
 
     # ring of three 5-cliques, single bridge edges between them
     edges = []
@@ -259,27 +260,25 @@ def test_leiden_recovers_cliques(spark):
         base = c * 10
         edges += [(base + i, base + j) for i in range(5) for j in range(i + 1, 5)]
     edges += [(4, 10), (14, 20), (24, 0)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = {r["node"]: r["cluster"] for r in leiden_driver(df).collect()}
-    # each clique is one community labeled by its smallest member
-    for c in range(3):
-        base = c * 10
-        labels = {out[base + i] for i in range(5)}
-        assert labels == {base}
+    df = _unit_micros(spark, edges)
+    out = {r["node"]: r["cluster"] for r in leiden_micros(df).collect()}
+    # each clique is one community, and the cliques are distinct ones
+    per_clique = [{out[c * 10 + i] for i in range(5)} for c in range(3)]
+    assert all(len(labels) == 1 for labels in per_clique)
+    assert len(set.union(*per_clique)) == 3
     # deterministic across runs
-    out2 = {r["node"]: r["cluster"] for r in leiden_driver(df).collect()}
+    out2 = {r["node"]: r["cluster"] for r in leiden_micros(df).collect()}
     assert out == out2
 
 
 def test_leiden_communities_are_connected(spark):
-    from scarf_spark.ml.cluster import leiden_driver
+    from scarf_spark.ml.cluster import leiden_micros
 
     # two triangles joined via a shared hub: communities must be
     # internally connected (Leiden's guarantee over Louvain)
     edges = [(0, 1), (1, 2), (2, 0), (10, 11), (11, 12), (12, 10),
              (0, 5), (5, 10)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = {r["node"]: r["cluster"] for r in leiden_driver(df).collect()}
+    out = {r["node"]: r["cluster"] for r in leiden_micros(_unit_micros(spark, edges)).collect()}
     adj = {}
     for a, b in edges:
         adj.setdefault(a, set()).add(b)

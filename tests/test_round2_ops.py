@@ -166,7 +166,7 @@ def test_h5_readers_gated_or_working(spark, tmp_path):
 def test_balanced_cut_splits_oversized():
     from scarf_spark.ml.cluster import (
         cut_dendrogram_balanced,
-        paris_like_dendrogram,
+        paris_dendrogram_micros,
     )
 
     # two tight 4-cliques joined by one weak bridge → dendrogram merges
@@ -176,8 +176,8 @@ def test_balanced_cut_splits_oversized():
     for base in (0, 4):
         for i in range(4):
             for j in range(i + 1, 4):
-                edges.append((base + i, base + j, 10.0))
-    edges.append((0, 4, 0.1))
+                edges.append((base + i, base + j, 10_000_000))
+    edges.append((0, 4, 100_000))
 
     class _FakeDF:
         def __init__(self, rows):
@@ -188,10 +188,10 @@ def test_balanced_cut_splits_oversized():
 
         def collect(self):
             return [
-                {"src": a, "dst": b, "weight": w} for a, b, w in self._rows
+                {"src": a, "dst": b, "w_micros": w} for a, b, w in self._rows
             ]
 
-    merges, leaves = paris_like_dendrogram(_FakeDF(edges))
+    merges, leaves = paris_dendrogram_micros(_FakeDF(edges))
     labels = cut_dendrogram_balanced(merges, leaves, max_size=4)
     groups = {}
     for node, c in labels.items():
@@ -232,10 +232,7 @@ def test_plan_lint_representative_queries(spark, sf_dir):
 
 
 def test_salted_aggregates_match_unsalted(spark):
-    from scarf_spark.operators.skew import (
-        salted_collect_list,
-        salted_count_distinct,
-    )
+    from scarf_spark.operators.skew import salted_count_distinct
 
     df = spark.range(2000).select(
         (F.col("id") % 3).alias("k"),           # 3 hot keys
@@ -250,16 +247,6 @@ def test_salted_aggregates_match_unsalted(spark):
         for r in df.groupBy("k").agg(F.count_distinct("v").alias("nd")).collect()
     }
     assert got == want
-
-    lists = {
-        r["k"]: r["values"]
-        for r in salted_collect_list(df, ["k"], "v", n_salts=8).collect()
-    }
-    plain = {
-        r["k"]: sorted(r["vs"])
-        for r in df.groupBy("k").agg(F.collect_list("v").alias("vs")).collect()
-    }
-    assert lists == plain
 
 
 def test_min_label_components_chain_and_singleton(spark):

@@ -141,22 +141,3 @@ def test_to_wide_zero_fill(spark):
     rows = {r["cell_id"]: (r["f1"], r["f2"]) for r in
             src.to_wide(counts, [1, 2]).collect()}
     assert rows == {0: (2.0, 3.0), 1: (0.0, 4.0)}
-
-
-def test_write_partitioned_prunes(spark, sf_dir, tmp_path):
-    from scarf_spark.catalog import DataStore
-    from scarf_spark.sources.sinks import write_partitioned
-
-    ev = DataStore(spark, sf_dir).events.withColumn(
-        "day", F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
-    )
-    out = write_partitioned(ev, str(tmp_path / "ev_part"), ["day"])
-    back = spark.read.parquet(out)
-    one_day = back.select("day").distinct().limit(1).collect()[0]["day"]
-    q = back.where(F.col("day") == one_day)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # the filter must reach the scan as a PARTITION filter (directory
-    # pruning), not a post-scan row filter
-    assert "PartitionFilters: [" in plan
-    assert f"(day#" in plan or "isnotnull(day" in plan
-    assert q.count() == ev.where(F.col("day") == one_day).count()

@@ -48,6 +48,12 @@ def test_clustering_columns(wf):
     assert n_clusters >= 1
 
 
+def test_balanced_cut_needs_max_size(wf):
+    # with no size bound the balanced cut would split every cell off
+    with pytest.raises(ValueError, match="run_clustering.*max_size"):
+        wf.run_clustering(balanced_cut=True)
+
+
 def test_umap_columns(wf):
     wf.run_umap(n_epochs=5)
     cols = wf.cells.columns
